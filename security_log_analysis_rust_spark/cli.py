@@ -8,6 +8,7 @@ verbs::
     python -m security_log_analysis_rust_spark export  --sink DIR --path P [--table T]
     python -m security_log_analysis_rust_spark import  --sink DIR --path P [--table T]
     python -m security_log_analysis_rust_spark report  --sink DIR --html P
+    python -m security_log_analysis_rust_spark compact --sink DIR
     python -m security_log_analysis_rust_spark serve   --sink DIR --dims DIR
     python -m security_log_analysis_rust_spark daemon  --in DIR --sink DIR
 
@@ -16,6 +17,7 @@ db     = monthly enriched parquet export (E2 step 1, K5)
 read   = per-country counts from the export, top-10 print (E2 step 2, A2/O3)
 export/import = JSON out/in, --table intrusion_log|host_country (K7/S9)
 report = per-country counts + geochart HTML (E3/K8)
+compact = rewrite each intrusion month holding several files as one file
 serve  = HTTP read API + TTL result cache (security_log_http.rs analog)
 daemon = streaming journald follow (S5)
 """
@@ -77,6 +79,9 @@ def main(argv=None) -> int:
     p.add_argument("--html", default=None)
 
     p = sub.add_parser("cleanup", help="dedupe the intrusion sink in place")
+    p.add_argument("--sink", required=True)
+
+    p = sub.add_parser("compact", help="one file per intrusion-sink month")
     p.add_argument("--sink", required=True)
 
     p = sub.add_parser("serve", help="HTTP read API (security_log_http.rs)")
@@ -241,6 +246,15 @@ def _dispatch(spark, args) -> int:
 
         n = cleanup_intrusion_log(spark, os.path.join(args.sink, "intrusion_log"))
         print(json.dumps({"removed": n}))
+        return 0
+
+    if args.cmd == "compact":
+        import os
+
+        from .pipeline.route import compact_intrusion_log
+
+        n = compact_intrusion_log(spark, os.path.join(args.sink, "intrusion_log"))
+        print(json.dumps({"months_compacted": n}))
         return 0
 
     if args.cmd == "serve":

@@ -83,7 +83,7 @@ def init_config(
 
     filters_raw = get("systemd_log_filters")
     filters = (
-        tuple(filters_raw.split(","))
+        tuple(f for f in filters_raw.split(",") if f)  # "" filters match all
         if filters_raw is not None
         else tuple(DEFAULT_SYSTEMD_LOG_FILTERS)
     )

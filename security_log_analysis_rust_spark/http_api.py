@@ -144,7 +144,7 @@ class SecurityLogApp:
 
     # -- data access ---------------------------------------------------------
 
-    def _intrusions(self):
+    def _intrusions(self, since: Optional[str] = None):
         from .pipeline.route import read_sink
         from .schemas import INTRUSION_LOG_SCHEMA
 
@@ -152,6 +152,7 @@ class SecurityLogApp:
             self.spark,
             os.path.join(self.sink_dir, "intrusion_log"),
             INTRUSION_LOG_SCHEMA,
+            since=since,
         )
 
     def _dims(self):
@@ -179,23 +180,36 @@ class SecurityLogApp:
         defaults: bool = True,
     ):
         """get_country_count_recent (reports.rs:8-35): per-country counts."""
-        from .pipeline.aggregate import per_country_counts
+        self.compute_calls += 1
+        df = self.country_count_df(service, location, ndays, defaults)
+        return [r.asDict() for r in df.collect()]
+
+    def country_count_df(
+        self,
+        service: Optional[str],
+        location: Optional[str],
+        ndays: Optional[int],
+        defaults: bool = True,
+    ):
+        """The DataFrame :meth:`country_count` collects. With ``ndays`` the
+        sink read is month-pruned to :func:`ndays_since`'s bound."""
+        from .pipeline.aggregate import ndays_since, per_country_counts
         from .pipeline.enrich import enrich_events
 
-        self.compute_calls += 1
         if defaults:  # security_log_http.rs:113-115
             service = service or "ssh"
             location = location or "home.ddboline.net"
             ndays = 30 if ndays is None else ndays
         hc, cc = self._dims()
-        df = per_country_counts(
-            enrich_events(self._intrusions(), hc, cc, how="inner"),
+        return per_country_counts(
+            enrich_events(
+                self._intrusions(ndays_since(ndays, self.as_of)), hc, cc, how="inner"
+            ),
             service=service,
             server=location,
             ndays=ndays,
             as_of=self.as_of,
         )
-        return [r.asDict() for r in df.collect()]
 
     def country_count_all(
         self,

@@ -10,6 +10,7 @@ general case.
 
 from __future__ import annotations
 
+from datetime import date, datetime, timedelta, timezone
 from typing import Optional
 
 from pyspark.sql import DataFrame
@@ -43,6 +44,27 @@ def per_country_counts(
         .agg(F.count(F.lit(1)).alias("count"))
         .orderBy(F.desc("count"), F.asc("country"))
     )
+
+
+def ndays_since(ndays: Optional[int], as_of: Optional[str] = None) -> Optional[str]:
+    """The ``ndays`` bound of :func:`per_country_counts` as an ISO date,
+    for pruning the sink read before it: date(as_of) - ndays, else the UTC
+    date today - ndays (the session clock is UTC). None when there is no
+    bound, or it falls outside Python's date range (no pruning then).
+
+    Without ``as_of`` this is computed before the query runs, so it is never
+    later than the ``current_date()`` bound the query applies: the pruned
+    read can only keep more rows than the exact filter, never fewer."""
+    if ndays is None:
+        return None
+    if as_of:
+        anchor = date.fromisoformat(str(as_of)[:10])
+    else:
+        anchor = datetime.now(timezone.utc).date()
+    try:
+        return (anchor - timedelta(days=ndays)).isoformat()
+    except OverflowError:
+        return None
 
 
 def per_host_counts(events: DataFrame) -> DataFrame:

@@ -79,6 +79,12 @@ def is_ssh_auth(line: Column) -> Column:
     )
 
 
+def is_filtered(line: Column, filters: Sequence[str]) -> Column:
+    """True where a journald line contains any of the blacklist ``filters``
+    (F6); no filters drop nothing."""
+    return reduce(or_, [line.contains(f) for f in filters], F.lit(False))
+
+
 def parse_ssh_lines(lines: DataFrame) -> DataFrame:
     """ssh auth lines -> events (P1+P2; service='ssh').
 
@@ -164,7 +170,7 @@ def parse_journald_lines(
     line. µs-epoch timestamps via ``timestamp_micros`` (P4).
     """
     line = F.col("line")
-    blacklist = reduce(or_, [line.contains(f) for f in filters])
+    blacklist = is_filtered(line, filters)
     j = (
         lines.filter(is_journald(line))
         .filter(~blacklist)
@@ -268,7 +274,7 @@ def extract_events(
     line = F.col("line")
     is_j = is_journald(line)
     is_ssh = is_ssh_auth(line)
-    blacklist = reduce(or_, [line.contains(f) for f in filters])
+    blacklist = is_filtered(line, filters)
 
     rec = F.from_json(F.when(is_j, line), JOURNALD_SCHEMA)
     jts = F.timestamp_micros(rec["__REALTIME_TIMESTAMP"].try_cast("long"))

@@ -12,7 +12,18 @@ exactly-once semantics are built from:
   dependent, ours is ordered by (username NULLS FIRST, url, line_no) and
   therefore reproducible — SURVEY.md §7.4.3);
 * ``append_dedup`` — anti-join against the existing sink before an append,
-  replacing ON CONFLICT DO NOTHING (O8 -> K1).
+  replacing ON CONFLICT DO NOTHING (O8 -> K1). The anti-join, the row count
+  and the write are one action: the count is a ``DataFrame.observe`` on the
+  write itself.
+
+Layout: the intrusion sink is partitioned by month(datetime)
+(:data:`MONTH_COL`), and every writer goes through :func:`_write_months`,
+which clusters rows by month before the write. One write adds one file per
+month it touches (more only for a month past AQE's advisory partition size)
+— the analog of the reference's one ``intrusion_log_{year}_{month}.parquet``
+per month (``src/polars_analysis.rs:145-146``). ``compact_intrusion_log``
+rewrites each month directory holding several files (one per append) back
+into that layout.
 
 Scale: the dedup shuffles once on the unique key — the same shuffle a
 ``groupBy`` would need; AQE handles skewed hosts. The anti-join reads only
@@ -22,10 +33,12 @@ incremental datetime range via ``since``.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import INTRUSION_LOG_SCHEMA, SYSTEMD_LOG_MESSAGES_SCHEMA
@@ -86,18 +99,27 @@ def to_systemd_log_messages(systemd: DataFrame) -> DataFrame:
     )
 
 
-def read_sink(spark: SparkSession, path: str, schema) -> DataFrame:
+def read_sink(
+    spark: SparkSession, path: str, schema, since: Optional[str] = None
+) -> DataFrame:
     """Read a parquet sink table projected to ``schema``'s columns (drops the
     physical partition column); empty DataFrame if it doesn't exist yet.
+
+    ``since`` (ISO date or timestamp) keeps only ``datetime >= since`` via
+    :func:`sink_month_filter`, applied before the projection drops
+    :data:`MONTH_COL`, so the scan skips the older month directories.
 
     Runs :func:`recover_sink` first: a crash between the two renames of
     :func:`_swap_dir` leaves the live dir absent with its ``_old.`` aside
     holding the data — without this, a pure read path would see "no sink"
     until some write-path entry point happened to repair it."""
     recover_sink(path)
-    if os.path.exists(path):
-        return spark.read.parquet(path).select(*[f.name for f in schema.fields])
-    return spark.createDataFrame([], schema)
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    df = spark.read.parquet(path)
+    if since is not None:
+        df = sink_month_filter(df, since)
+    return df.select(*[f.name for f in schema.fields])
 
 
 #: intrusion sink partition column: month(datetime), written as 'yyyy-MM'
@@ -117,6 +139,31 @@ def sink_month_filter(df: DataFrame, since: str) -> DataFrame:
     return df.filter(F.col("datetime") >= F.lit(since))
 
 
+def _write_months(df: DataFrame, path: str, mode: str) -> int:
+    """The one intrusion-sink writer: ``df`` (carrying :data:`MONTH_COL`)
+    written ``partitionBy(MONTH_COL)`` after a ``REBALANCE(MONTH_COL)``.
+    Returns the number of rows written.
+
+    The rebalance hashes each month to one shuffle partition; AQE then
+    merges small partitions up to the advisory size and splits a month
+    larger than it. So a write adds one file per month, not one per
+    (task, month) — and unlike ``repartition(MONTH_COL)``, a huge month is
+    not confined to a single task. The count is observed on the write
+    itself (no second job). It sits above the rebalance on purpose: below
+    it, AQE replaces an empty shuffle stage, observer included, with an
+    empty relation, and an empty write would report no count at all.
+    """
+    seen = Observation()
+    (
+        df.hint("rebalance", MONTH_COL)
+        .observe(seen, F.count(F.lit(1)).alias("n"))
+        .write.mode(mode)
+        .partitionBy(MONTH_COL)
+        .parquet(path)
+    )
+    return seen.get["n"]
+
+
 def _swap_dir(live: str, tmp: str) -> None:
     """Replace directory ``live`` with ``tmp`` via rename-aside.
 
@@ -127,8 +174,6 @@ def _swap_dir(live: str, tmp: str) -> None:
     The aside name is ``_old.<name>`` (underscore prefix = invisible to
     Spark's file listing, so a concurrent partitioned read never sees it).
     """
-    import shutil
-
     parent, name = os.path.split(os.path.normpath(live))
     aside = os.path.join(parent, "_old." + name)
     if os.path.exists(aside):  # leftover from a crashed *completed* swap
@@ -136,6 +181,21 @@ def _swap_dir(live: str, tmp: str) -> None:
     os.rename(live, aside)
     os.rename(tmp, live)
     shutil.rmtree(aside)
+
+
+def _rewrite_month(sink_path: str, month: str, rows: DataFrame) -> None:
+    """Replace the ``month`` directory with ``rows`` (all of that month,
+    carrying :data:`MONTH_COL`) in the clustered layout.
+
+    The rows are staged under ``.tmp.dt_month=<month>`` (dot prefix =
+    invisible to Spark's listing) and swapped in by :func:`_swap_dir`; a
+    crash leaves the old month or the new one, and :func:`recover_sink`
+    removes the staging dir."""
+    stage = os.path.join(sink_path, f".tmp.{MONTH_COL}={month}")
+    part = f"{MONTH_COL}={month}"
+    _write_months(rows, stage, "overwrite")
+    _swap_dir(os.path.join(sink_path, part), os.path.join(stage, part))
+    shutil.rmtree(stage)
 
 
 def recover_sink(sink_path: str) -> None:
@@ -148,9 +208,6 @@ def recover_sink(sink_path: str) -> None:
     (pre-rename-aside) crash stranded the whole history in the tmp: fail
     loudly instead of silently starting a fresh sink.
     """
-    import glob as _glob
-    import shutil
-
     parent, name = os.path.split(os.path.normpath(sink_path))
     aside = os.path.join(parent, "_old." + name)
     tmp = sink_path + ".tmp"
@@ -169,9 +226,7 @@ def recover_sink(sink_path: str) -> None:
                 "back manually; refusing to start a fresh sink."
             )
     if os.path.isdir(sink_path):
-        for md_aside in _glob.glob(
-            os.path.join(sink_path, f"_old.{MONTH_COL}=*")
-        ):
+        for md_aside in glob.glob(os.path.join(sink_path, f"_old.{MONTH_COL}=*")):
             live = os.path.join(
                 sink_path, os.path.basename(md_aside)[len("_old.") :]
             )
@@ -179,7 +234,7 @@ def recover_sink(sink_path: str) -> None:
                 shutil.rmtree(md_aside)
             else:
                 os.rename(md_aside, live)
-        for md_tmp in _glob.glob(os.path.join(sink_path, f".tmp.{MONTH_COL}=*")):
+        for md_tmp in glob.glob(os.path.join(sink_path, f".tmp.{MONTH_COL}=*")):
             shutil.rmtree(md_tmp)  # month rewrites stage next to the live dir
 
 
@@ -194,23 +249,19 @@ def _migrate_unpartitioned_sink(spark: SparkSession, sink_path: str) -> bool:
     either the legacy layout or the new one — never a missing sink).
     Returns True if a migration happened.
     """
-    import glob as _glob
-
     root_files = [
-        p
-        for p in _glob.glob(os.path.join(sink_path, "*.parquet"))
-        if os.path.isfile(p)
+        p for p in glob.glob(os.path.join(sink_path, "*.parquet")) if os.path.isfile(p)
     ]
     if not root_files:
         return False
     flat = spark.read.parquet(*root_files)
     flat = flat.withColumn(MONTH_COL, F.date_format("datetime", "yyyy-MM"))
-    month_dirs = sorted(_glob.glob(os.path.join(sink_path, f"{MONTH_COL}=*")))
+    month_dirs = sorted(glob.glob(os.path.join(sink_path, f"{MONTH_COL}=*")))
     if month_dirs:  # already-mixed sink: keep both halves
         part = spark.read.option("basePath", sink_path).parquet(*month_dirs)
         flat = flat.unionByName(part.select(*flat.columns))
     tmp = sink_path + ".tmp"
-    flat.write.mode("overwrite").partitionBy(MONTH_COL).parquet(tmp)
+    _write_months(flat, tmp, "overwrite")
     _swap_dir(sink_path, tmp)
     return True
 
@@ -231,23 +282,29 @@ def append_dedup(
     months via partition pruning — a 100 TB sink is never fully re-scanned
     per split. Correctness: every new row has ``datetime >= since``, so any
     conflicting sink row lies in the pruned range by construction.
+
+    One action: the anti-join, the count and the write run as one query
+    (the sink's files are listed when it is planned, and new files are
+    committed only when it ends). An append of 0 rows adds no data file,
+    and leaves no sink directory where there was none — Spark's empty
+    partitioned write would leave one holding only ``_SUCCESS``, which no
+    read can infer a schema from.
     """
     recover_sink(sink_path)
-    if os.path.exists(sink_path):
+    existed = os.path.exists(sink_path)
+    if existed:
         _migrate_unpartitioned_sink(spark, sink_path)
         existing = spark.read.parquet(sink_path)
         if since is not None:
             existing = sink_month_filter(existing, since)
         new_rows = new_rows.join(existing.select(*key), key, "left_anti")
-    new_rows = new_rows.withColumn(
-        MONTH_COL, F.date_format("datetime", "yyyy-MM")
-    ).persist()
-    try:
-        n = new_rows.count()
-        if n:
-            new_rows.write.mode("append").partitionBy(MONTH_COL).parquet(sink_path)
-    finally:
-        new_rows.unpersist()
+    n = _write_months(
+        new_rows.withColumn(MONTH_COL, F.date_format("datetime", "yyyy-MM")),
+        sink_path,
+        "append",
+    )
+    if not n and not existed:
+        shutil.rmtree(sink_path)
     return n
 
 
@@ -261,8 +318,8 @@ def cleanup_intrusion_log(spark: SparkSession, sink_path: str) -> int:
     :data:`MONTH_COL` = month(datetime), so duplicate rows always share a
     month partition. The dup scan reads only key columns (column-pruned),
     and ONLY the month directories that actually contain duplicates are
-    rewritten (rename-aside swap per directory); every other month keeps
-    its original part-files untouched. This is the plain-parquet analog of
+    rewritten (:func:`_rewrite_month`); every other month keeps its
+    original part-files untouched. This is the plain-parquet analog of
     a table-format partition-level rewrite — a 100 TB sink with a few dirty
     months rewrites a few months, not 100 TB.
     """
@@ -283,22 +340,43 @@ def cleanup_intrusion_log(spark: SparkSession, sink_path: str) -> int:
     if not dup_months:
         return 0
     removed = 0
-    payload = F.struct(*[F.col(c) for c in df.columns if c != MONTH_COL])
+    payload = F.struct(*[F.col(c) for c in df.columns])
     for r in dup_months:
         month, extra = r["__m"], int(r["__extra"])
-        live = os.path.join(sink_path, f"{MONTH_COL}={month}")
         part = df.filter(F.col(MONTH_COL) == month)  # partition-pruned scan
         deduped = (
             part.groupBy(*UNIQUE_KEY)
             .agg(F.max_by(payload, F.col("id")).alias("__row"))
             .select("__row.*")
         )
-        tmp = os.path.join(sink_path, f".tmp.{MONTH_COL}={month}")
-        deduped.write.mode("overwrite").parquet(tmp)
-        _swap_dir(live, tmp)
+        _rewrite_month(sink_path, month, deduped)
         removed += extra
     spark.catalog.refreshByPath(sink_path)  # drop stale FileStatus entries
     return removed
+
+
+def compact_intrusion_log(spark: SparkSession, sink_path: str) -> int:
+    """Rewrite every month directory that holds more than one data file
+    (one per earlier append, or the older one-file-per-task layout) into
+    the clustered layout of :func:`_write_months`, each month swapped in
+    by :func:`_rewrite_month`. Rows are unchanged. Returns the number of
+    months rewritten; a month already at one file is not touched."""
+    recover_sink(sink_path)
+    if not os.path.exists(sink_path):
+        return 0
+    _migrate_unpartitioned_sink(spark, sink_path)
+    months = [
+        os.path.basename(d).split("=", 1)[1]
+        for d in sorted(glob.glob(os.path.join(sink_path, f"{MONTH_COL}=*")))
+        if len(glob.glob(os.path.join(d, "*.parquet"))) > 1
+    ]
+    if not months:
+        return 0
+    df = spark.read.parquet(sink_path)
+    for month in months:
+        _rewrite_month(sink_path, month, df.filter(F.col(MONTH_COL) == month))
+    spark.catalog.refreshByPath(sink_path)
+    return len(months)
 
 
 def write_sinks_single_pass(routed: DataFrame, out_dir: str) -> None:

@@ -26,6 +26,7 @@ set (given one consistent total order: rounded sim desc, neighbor_id asc).
 
 from __future__ import annotations
 
+import functools
 from typing import Iterator, List
 
 import numpy as np
@@ -139,29 +140,28 @@ def _vecs_lit(vecs) -> Column:
     return F.expr("array(" + ",".join(_vec_sql(v) for v in vecs) + ")")
 
 
-#: plane-literal Column cache — planes are pure functions of the key, and a
-#: Column is an immutable expression handle (JVM-wide, not session-scoped),
-#: so rebuilding the ~4k-node literal per query is pure waste. This caches
-#: an EXPRESSION (seeded constants), never data or results.
-_PLANES_LIT_CACHE: dict = {}
-
-
+@functools.lru_cache(maxsize=8)
 def _planes_lit(
     n_tables: int, n_bits: int, dim: int, seed: int, bank_bits: int | None
 ) -> Column:
-    key = (n_tables, n_bits, dim, seed, bank_bits)
-    if key not in _PLANES_LIT_CACHE:
-        gen_bits = bank_bits if bank_bits else n_bits
-        planes = seeded_planes(n_tables, gen_bits, dim, seed=seed)
-        _PLANES_LIT_CACHE[key] = F.expr(
-            "array("
-            + ",".join(
-                "array(" + ",".join(_vec_sql(p) for p in tbl[:n_bits]) + ")"
-                for tbl in planes
-            )
-            + ")"
+    """The plane bank as one array<array<array<double>>> literal.
+
+    LRU-cached: planes are pure functions of the key, and a Column is an
+    immutable expression handle (JVM-wide, not session-scoped), so
+    rebuilding the ~4k-node literal per query is pure waste. This caches an
+    EXPRESSION (seeded constants), never data or results. Eight keys cover
+    every (shape, seed) one corpus pass uses (three, warm-up draw included)
+    while keeping a long-lived process from holding every literal it built."""
+    gen_bits = bank_bits if bank_bits else n_bits
+    planes = seeded_planes(n_tables, gen_bits, dim, seed=seed)
+    return F.expr(
+        "array("
+        + ",".join(
+            "array(" + ",".join(_vec_sql(p) for p in tbl[:n_bits]) + ")"
+            for tbl in planes
         )
-    return _PLANES_LIT_CACHE[key]
+        + ")"
+    )
 
 
 def _lambda_dot(v: Column, p: Column) -> Column:

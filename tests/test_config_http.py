@@ -59,6 +59,14 @@ def test_config_systemd_log_filters_env():
     )
 
 
+def test_config_systemd_log_filters_drop_empty_entries():
+    """An empty entry would match, and so drop, every journald line: an
+    empty variable means no filters, and stray commas add none."""
+    assert init_config(env={"SYSTEMD_LOG_FILTERS": ""}).systemd_log_filters == ()
+    cfg = init_config(env={"SYSTEMD_LOG_FILTERS": "a,,b"})
+    assert cfg.systemd_log_filters == ("a", "b")
+
+
 def test_config_env_file_and_override(tmp_path, monkeypatch):
     d = tmp_path / "security_log_analysis_rust_spark"
     d.mkdir()

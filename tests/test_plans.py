@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 from pyspark.sql import functions as F
 
@@ -103,6 +104,28 @@ def test_incremental_antijoin_prunes_sink_partitions(spark, tmp_path):
     plan = _plan(pruned)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf and "dt_month" in pf[0], plan
+
+
+def test_country_count_sink_read_prunes_months(spark, tmp_path):
+    """With ``ndays`` the dashboard's sink scan carries a dt_month
+    partition filter (older month directories are never listed or opened);
+    without it the whole sink is read."""
+    from security_log_analysis_rust_spark.http_api import SecurityLogApp
+    from security_log_analysis_rust_spark.pipeline.checkpoint import run_incremental
+
+    paths = ensure_synthetic(TESTDATA_SF_SMALL)
+    sink = str(tmp_path / "sink")
+    run_incremental(spark, paths["pages"], sink, files_per_split=4)
+    app = SecurityLogApp(
+        spark, sink, os.path.dirname(paths["host_country"]), as_of="2024-12-31"
+    )
+
+    def month_filters(ndays):
+        plan = _plan(app.country_count_df(None, None, ndays, defaults=False))
+        return [l for l in plan.splitlines() if "PartitionFilters" in l and "dt_month" in l]
+
+    assert month_filters(90), "ndays=90 must prune the sink by month"
+    assert not month_filters(None)
 
 
 def _analyzed(df) -> str:

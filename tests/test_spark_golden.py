@@ -154,3 +154,29 @@ def test_udf_all_null_batch(spark):
         invalid_user_udf(F.when(F.lit(False), F.col("line"))).alias("ex")
     ).collect()
     assert all(r.ex.host is None and r.ex.username is None for r in out)
+
+
+def test_extract_events_without_filters_keeps_every_journald_line(spark):
+    """filters=() blacklists nothing: a line the default filters drop is
+    routed like any other, in both the fused and the per-branch parse."""
+    from datetime import datetime
+
+    from security_log_analysis_rust_spark.pipeline.parse import (
+        extract_events,
+        pages_to_lines,
+        parse_journald_lines,
+    )
+
+    lines = [
+        '{"__REALTIME_TIMESTAMP":"1655046591494032","MESSAGE":"disk error",'
+        '"UNIT":"a.service"}',
+        '{"__REALTIME_TIMESTAMP":"1655046592494032","MESSAGE":"error: '
+        'kex_exchange_identification: read: Connection reset","UNIT":"sshd.service"}',
+    ]
+    pages = spark.createDataFrame(
+        [("https://home.ddboline.net/journal", datetime(2022, 6, 12), "\n".join(lines))],
+        "url string, warc_ts timestamp, text string",
+    )
+    assert extract_events(pages)["systemd"].count() == 1  # default filters
+    assert extract_events(pages, filters=())["systemd"].count() == 2
+    assert parse_journald_lines(pages_to_lines(pages), filters=())[1].count() == 2
