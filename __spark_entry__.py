@@ -150,16 +150,14 @@ def _doc_shingle_expr():
 
 
 def _doc_token_arrays(docs: DataFrame) -> DataFrame:
-    """(doc_id, __toks): token array materialized behind an explode-barrier
-    (the ``textops.winnow`` / ``textops.exactsubstr`` move) so the 3-gram
-    lambda slices a bound ATTRIBUTE: inlined, Catalyst re-evaluates the
-    whole ``split(lower(trim(text)))`` once per ``F.get`` per shingle —
-    measured 2.5x slower on the sf0.1 corpus (r6)."""
+    """(doc_id, __toks): token array materialized beside an explode-barrier
+    so the 3-gram lambda slices a bound attribute instead of re-running the
+    ``split(lower(trim(text)))`` once per ``F.get`` per shingle."""
+    from security_log_analysis_rust_spark.textops.util import explode_barrier
+
     docs = _spread_small_input(docs)
     return docs.select(
-        "doc_id",
-        _doc_tokens().alias("__toks"),
-        F.explode(F.array(F.lit(1))).alias("__b"),
+        "doc_id", _doc_tokens().alias("__toks"), explode_barrier().alias("__b")
     )
 
 
@@ -636,9 +634,10 @@ def q_docs_training_corpus(spark, sf_dir):
     #   explode drops them, so the inner join dropped them) — here every
     #   predicate is null on null text and the barrier drops them too.
     #
-    # Same materialize-then-explode-barrier shape as pipeline/parse.py: a
-    # plain .filter() would be pushed below the projection with the token
-    # split re-inlined per reference.
+    # Rows drop at an explode-barrier, as in pipeline/parse.py, so the
+    # token split is evaluated once per doc.
+    from security_log_analysis_rust_spark.textops.util import explode_barrier
+
     d = _spread_small_input(_docs(spark, sf_dir))
     t = F.concat(F.lit(" "), F.lower("text"), F.lit(" "))
 
@@ -696,14 +695,7 @@ def q_docs_training_corpus(spark, sf_dir):
     sig = (
         d.withColumn("__lq", lang_ok & qual_ok)
         .withColumn("__toks", F.split(F.lower(F.trim("text")), r"\s+"))
-        .withColumn(
-            "__keep",
-            F.explode(
-                F.when(
-                    F.col("__lq") & rep_ok, F.array(F.lit(1))
-                ).otherwise(F.array().cast("array<int>"))
-            ),
-        )
+        .withColumn("__keep", explode_barrier(F.col("__lq") & rep_ok))
         .select("doc_id", "source", "n_chars")
     )
     return sig.join(kept, "doc_id").select("doc_id", "source", "n_chars")

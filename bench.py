@@ -76,14 +76,10 @@ def run_headline(spark, sf_dir: str, trials: int = 2) -> dict:
     ).collect()[0][0]
 
     # infra warmup: spin up the Arrow python workers (used by q9's
-    # applyInPandas kernel; the parse path is pure JVM since round 3) and
-    # shuffle machinery on ONE row so the timed queries measure the query,
-    # not daemon fork + JIT; plans still run cold
-    from security_log_analysis_rust_spark.parsing.udfs import invalid_user_udf
-
-    spark.range(1).select(
-        invalid_user_udf(F.lit("Invalid user x from 1.2.3.4 port 1"))
-    ).collect()
+    # applyInPandas kernel; the parse path is pure JVM) and shuffle
+    # machinery on ONE row so the timed queries measure the query, not
+    # daemon fork + JIT; plans still run cold
+    spark.range(1).mapInPandas(lambda batches: batches, "id long").collect()
     spark.range(64).repartition(8).groupBy((F.col("id") % 4).alias("k")).count().collect()
 
     import __spark_entry__ as E

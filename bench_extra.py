@@ -98,11 +98,7 @@ def run_isolate(spark, sf_dir: str, trials: int) -> dict:
     # warm python workers / shuffle machinery once (mirrors frozen bench)
     from pyspark.sql import functions as F
 
-    from security_log_analysis_rust_spark.parsing.udfs import invalid_user_udf
-
-    spark.range(1).select(
-        invalid_user_udf(F.lit("Invalid user x from 1.2.3.4 port 1"))
-    ).collect()
+    spark.range(1).mapInPandas(lambda batches: batches, "id long").collect()
     spark.range(64).repartition(8).groupBy((F.col("id") % 4).alias("k")).count().collect()
 
     best: dict = {}

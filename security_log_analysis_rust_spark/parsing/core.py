@@ -6,10 +6,11 @@ roles:
 
 1. **Oracle**: tests compare the Spark pipeline's extracted bytes per url
    against these (BASELINE.md "per-url extracted bytes").
-2. **Specification**: the vectorized pandas-UDF bank in
-   :mod:`security_log_analysis_rust_spark.parsing.udfs` implements the same
-   semantics with Arrow-batched column ops; unit tests assert equivalence on
-   goldens and on the reference's own fixture files.
+2. **Specification**: the column expressions in
+   :mod:`security_log_analysis_rust_spark.parsing.exprs` and
+   :mod:`security_log_analysis_rust_spark.pipeline.parse` implement the same
+   semantics inside Spark; unit tests assert equivalence on goldens, on
+   hypothesis-drawn lines and on the reference's own fixture files.
 
 Key byte-level subtleties (SURVEY.md §7.4):
 

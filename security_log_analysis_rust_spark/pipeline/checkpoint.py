@@ -31,7 +31,7 @@ import time
 from dataclasses import dataclass, field
 from typing import List, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .parse import extract_events
@@ -232,12 +232,15 @@ def run_incremental(
                 spark, intr_path, to_intrusion_log(events), key=UNIQUE_KEY,
                 since=since,
             )
-            sysd = to_systemd_log_messages(out["systemd"])
-            n_sysd = sysd.count()
-            # per-split overwrite => idempotent re-run without a unique key
-            sysd.write.mode("overwrite").parquet(
+            # per-split overwrite => idempotent re-run without a unique key;
+            # the row count is observed on the write itself (no second job)
+            sysd_seen = Observation()
+            to_systemd_log_messages(out["systemd"]).observe(
+                sysd_seen, F.count(F.lit(1)).alias("n")
+            ).write.mode("overwrite").parquet(
                 os.path.join(sysd_path, f"split={sid}")
             )
+            n_sysd = sysd_seen.get["n"]
         finally:
             out["parsed"].unpersist()
 

@@ -11,13 +11,14 @@ Maps the reference's per-source parsers onto one line-routed DataFrame DAG
 3. anything else is an apache-CLF candidate
    -> ``parse_log_line_apache`` semantics (``src/parse_logs.rs:208-232``)
 
-Guards, tokenization, timestamp parsing AND (since round 3) the byte-exact
-'Invalid user' extraction are all built-in column expressions — the whole
-parse stage runs inside whole-stage codegen with zero Python workers
-(``parsing/exprs.py``; the Arrow pandas kernel in ``parsing/udfs.py``
-remains as a differential-tested second implementation). Everything uses
-``try_*`` variants so the stage is safe under ANSI mode (Spark 4 default) —
-unparseable rows drop instead of failing a 100 TB job.
+Guards, tokenization, timestamp parsing and the byte-exact 'Invalid user'
+extraction are all built-in column expressions, so the whole parse stage
+runs inside whole-stage codegen with zero Python workers. Each parse
+expression has one builder: the tokenizer, timestamp and level builders
+below, the extraction and byte truncation in ``parsing/exprs.py``;
+``parsing/core.py`` is the pure-Python spec they are tested against. Everything uses ``try_*`` variants so the
+stage is safe under ANSI mode (Spark 4 default) — unparseable rows drop
+instead of failing a 100 TB job.
 
 Scale notes: every transform here is narrow (filter/project over the line
 explode), so this stage never shuffles; it scales linearly with input splits
@@ -34,8 +35,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..parsing.core import DEFAULT_SYSTEMD_LOG_FILTERS, SERVERS
-from ..parsing.exprs import invalid_user_expr
+from ..parsing.exprs import HOST_BYTES, invalid_user_expr, trunc_bytes_expr
 from ..schemas import JOURNALD_SCHEMA
+from ..textops.util import explode_barrier
 
 #: strict dotted-quad (matches Rust ``Ipv4Addr`` parse: 0-255, no leading 0s)
 IPV4_RE = (
@@ -79,6 +81,51 @@ def is_ssh_auth(line: Column) -> Column:
     )
 
 
+def tokens_expr(text: Column) -> Column:
+    """Whitespace tokens of ``text`` (Rust ``split_whitespace``)."""
+    return F.split(F.trim(text), r"\s+")
+
+
+def level_expr(line: Column) -> Column:
+    """Leveled-message classifier over the raw journald line (P7): the first
+    of error/warn/info/debug that it mentions."""
+    return (
+        F.when(line.contains("err") | line.contains("ERR"), "error")
+        .when(line.contains("warn") | line.contains("WARN"), "warn")
+        .when(line.contains("info") | line.contains("INFO"), "info")
+        .when(line.contains("debug") | line.contains("DEBUG"), "debug")
+    )
+
+
+def ssh_ts_expr(year: Column) -> Column:
+    """Timestamp of an ssh auth line tokenized into ``toks``:
+    ``"{tok0} {tok1} {year} {tok2}"`` parsed as ``MMM d yyyy HH:mm:ss``
+    (parse_logs.rs:88-116). The syslog format carries no year, so the
+    caller supplies one: the reference uses the log file's mtime year
+    (parse_logs.rs:156-158); crawled pages use ``year(warc_ts)``, the
+    analogous provenance. The session pins UTC (SURVEY §7.4.2)."""
+    return F.try_to_timestamp(
+        F.concat_ws(
+            " ",
+            F.get("toks", 0),
+            F.get("toks", 1),
+            year.cast("string"),
+            F.get("toks", 2),
+        ),
+        F.lit("MMM d yyyy HH:mm:ss"),
+    )
+
+
+def apache_ts_expr() -> Column:
+    """Timestamp of a CLF line tokenized into ``toks``: ``toks[3] + toks[4]``
+    with the brackets stripped, as ``d/MMM/yyyy:HH:mm:ssxx``
+    (parse_logs.rs:208-232)."""
+    return F.try_to_timestamp(
+        F.regexp_replace(F.concat(F.get("toks", 3), F.get("toks", 4)), r"[\[\]]", ""),
+        F.lit("d/MMM/yyyy:HH:mm:ssxx"),
+    )
+
+
 def is_filtered(line: Column, filters: Sequence[str]) -> Column:
     """True where a journald line contains any of the blacklist ``filters``
     (F6); no filters drop nothing."""
@@ -86,31 +133,14 @@ def is_filtered(line: Column, filters: Sequence[str]) -> Column:
 
 
 def parse_ssh_lines(lines: DataFrame) -> DataFrame:
-    """ssh auth lines -> events (P1+P2; service='ssh').
-
-    Timestamp: ``"{tok0} {tok1} {year} {tok2}"`` with year = year(warc_ts)
-    (the reference uses log-file mtime year, parse_logs.rs:156-158; the crawl
-    timestamp is the analogous provenance here), pinned to UTC (SURVEY §7.4.2).
-    """
+    """ssh auth lines -> events (P1+P2; service='ssh'), timestamped by
+    :func:`ssh_ts_expr` with year = year(warc_ts)."""
     line = F.col("line")
-    toks = F.split(F.trim(line), r"\s+")
     df = (
         lines.filter(is_ssh_auth(line))
-        .withColumn("toks", toks)
+        .withColumn("toks", tokens_expr(line))
         .filter(F.size("toks") >= 10)  # F2 token guard (parse_logs.rs:93-96)
-        .withColumn(
-            "datetime",
-            F.try_to_timestamp(
-                F.concat_ws(
-                    " ",
-                    F.get("toks", 0),
-                    F.get("toks", 1),
-                    F.year("warc_ts").cast("string"),
-                    F.get("toks", 2),
-                ),
-                F.lit("MMM d yyyy HH:mm:ss"),
-            ),
-        )
+        .withColumn("datetime", ssh_ts_expr(F.year("warc_ts")))
         .withColumn("ex", invalid_user_expr(line))
     )
     return df.filter(
@@ -129,22 +159,13 @@ def parse_ssh_lines(lines: DataFrame) -> DataFrame:
 def parse_apache_lines(lines: DataFrame) -> DataFrame:
     """apache CLF candidates -> events (P3; service='apache', username NULL)."""
     line = F.col("line")
-    toks = F.split(F.trim(line), r"\s+")
     df = (
         lines.filter(~is_journald(line) & ~is_ssh_auth(line))
-        .withColumn("toks", toks)
+        .withColumn("toks", tokens_expr(line))
         .filter(F.size("toks") >= 5)  # F2 (parse_logs.rs:209-212)
-        .withColumn("host", F.substring(F.get("toks", 0), 1, 60))
+        .withColumn("host", trunc_bytes_expr(F.get("toks", 0), HOST_BYTES))
         .filter(F.col("host").contains("."))  # F3 (parse_logs.rs:215-217)
-        .withColumn(
-            "datetime",
-            F.try_to_timestamp(
-                F.regexp_replace(
-                    F.concat(F.get("toks", 3), F.get("toks", 4)), r"[\[\]]", ""
-                ),
-                F.lit("d/MMM/yyyy:HH:mm:ssxx"),
-            ),
-        )
+        .withColumn("datetime", apache_ts_expr())
         .filter(F.col("datetime").isNotNull())
     )
     return df.select(
@@ -200,8 +221,8 @@ def parse_journald_lines(
         )
     )
 
-    mtoks = F.split(F.trim(F.col("rec.MESSAGE")), r"\s+")
-    nginx_host = F.substring(F.get(mtoks, 2), 1, 60)
+    mtoks = tokens_expr(F.col("rec.MESSAGE"))
+    nginx_host = trunc_bytes_expr(F.get(mtoks, 2), HOST_BYTES)
     nginx_ok = (
         ~is_invalid_user
         & line.contains("nginx")
@@ -220,12 +241,7 @@ def parse_journald_lines(
 
     # leveled messages: everything not routed above (failed nginx parses
     # fall through, parse_logs.rs:354-363); classifier on the raw line
-    level = (
-        F.when(line.contains("err") | line.contains("ERR"), "error")
-        .when(line.contains("warn") | line.contains("WARN"), "warn")
-        .when(line.contains("info") | line.contains("INFO"), "info")
-        .when(line.contains("debug") | line.contains("DEBUG"), "debug")
-    )
+    level = level_expr(line)
     systemd = (
         j.filter(~is_invalid_user & ~nginx_ok)
         .withColumn("log_level", level)
@@ -266,7 +282,7 @@ def extract_events(
 
     Semantically identical to :func:`extract_events_union` (tested), but the
     whole route is ONE projection over ONE explode of ONE scan, and the
-    pandas UDF runs once per line instead of once per branch. At 100 TB the
+    extraction runs once per line instead of once per branch. At 100 TB the
     input scan dominates, so branch unions (3-4 scans) are the wrong plan;
     this is the plan you'd want: scan -> narrow project/filter, zero
     redundant passes.
@@ -281,24 +297,6 @@ def extract_events(
     j_valid = is_j & ~blacklist & jts.isNotNull()
     has_invalid_user = line.contains("Invalid user ")
 
-    toks = F.split(F.trim(line), r"\s+")
-    ssh_ts = F.try_to_timestamp(
-        F.concat_ws(
-            " ",
-            F.get("toks", 0),
-            F.get("toks", 1),
-            F.year("warc_ts").cast("string"),
-            F.get("toks", 2),
-        ),
-        F.lit("MMM d yyyy HH:mm:ss"),
-    )
-    apache_ts = F.try_to_timestamp(
-        F.regexp_replace(F.concat(F.get("toks", 3), F.get("toks", 4)), r"[\[\]]", ""),
-        F.lit("d/MMM/yyyy:HH:mm:ssxx"),
-    )
-    apache_host = F.substring(F.get("toks", 0), 1, 60)
-
-    nginx_host = F.substring(F.get("mtoks", 2), 1, 60)
     nginx_ok = (
         F.col("j_valid")
         & ~F.col("has_iu")
@@ -306,25 +304,10 @@ def extract_events(
         & (F.size("mtoks") >= 3)
         & F.col("nginx_host").rlike(IPV4_RE)
     )
-    level = (
-        F.when(line.contains("err") | line.contains("ERR"), "error")
-        .when(line.contains("warn") | line.contains("WARN"), "warn")
-        .when(line.contains("info") | line.contains("INFO"), "info")
-        .when(line.contains("debug") | line.contains("DEBUG"), "debug")
-    )
 
-    # Stage 1: every per-line derivation is materialized as a COLUMN and the
-    # kind routing references only those attributes; the row drop happens via
-    # an explode-barrier instead of a Filter. Rationale (r6, measured): a
-    # plain ``.filter(kind.isNotNull())`` is pushed below the projections by
-    # PushDownPredicates with the full ``kind`` CASE *inlined*, so the filter
-    # re-derived from_json ~8x and split(trim(line)) ~10x per line straight
-    # from ``line`` (visible in plans/r06/q1_parse_route_before.txt); the
-    # barrier pins one evaluation of each derivation per line. (Historical
-    # note: the extraction was an Arrow pandas UDF through round 2, and
-    # Catalyst duplicates a UDF referenced across a Filter boundary into two
-    # ArrowEvalPython passes; the same barrier idea predates the
-    # pure-expression extraction.)
+    # Stage 1: every per-line derivation is materialized as a COLUMN, the
+    # kind routing references only those attributes, and unrouted lines drop
+    # at an explode_barrier, which evaluates each derivation once per line.
     parsed0 = (
         pages_to_lines(pages)
         .withColumn("j_valid", j_valid)
@@ -332,8 +315,8 @@ def extract_events(
         .withColumn("msg", rec["MESSAGE"])
         .withColumn("unit", rec["UNIT"])
         .withColumn("jts", jts)
-        .withColumn("toks", toks)
-        .withColumn("apache_host", apache_host)
+        .withColumn("toks", tokens_expr(line))
+        .withColumn("apache_host", trunc_bytes_expr(F.get("toks", 0), HOST_BYTES))
         # timestamp parsing is the parse stage's heaviest per-line work
         # (measured ~2x everything else combined), so both banks are
         # materialized GUARDED by their branch predicates — non-candidate
@@ -341,7 +324,8 @@ def extract_events(
         # ``isNotNull`` on the column equal to the old unguarded
         # ``guard & ts.isNotNull()`` conjunction everywhere it is read
         .withColumn(
-            "ssh_ts", F.when(is_ssh & (F.size("toks") >= 10), ssh_ts)
+            "ssh_ts",
+            F.when(is_ssh & (F.size("toks") >= 10), ssh_ts_expr(F.year("warc_ts"))),
         )
         .withColumn(
             "apache_ts",
@@ -350,12 +334,12 @@ def extract_events(
                 & ~is_ssh
                 & (F.size("toks") >= 5)
                 & F.col("apache_host").contains("."),
-                apache_ts,
+                apache_ts_expr(),
             ),
         )
-        .withColumn("mtoks", F.split(F.trim(F.col("msg")), r"\s+"))
-        .withColumn("nginx_host", nginx_host)
-        .withColumn("level", level)
+        .withColumn("mtoks", tokens_expr(F.col("msg")))
+        .withColumn("nginx_host", trunc_bytes_expr(F.get("mtoks", 2), HOST_BYTES))
+        .withColumn("level", level_expr(line))
         .withColumn(
             "kind",
             F.when(F.col("j_valid") & F.col("has_iu"), "jssh")
@@ -367,21 +351,12 @@ def extract_events(
             .when(F.col("ssh_ts").isNotNull(), "ssh")
             .when(F.col("apache_ts").isNotNull(), "apache"),
         )
-        .withColumn(
-            "__line_keep",
-            F.explode(
-                F.when(F.col("kind").isNotNull(), F.array(F.lit(1))).otherwise(
-                    F.array().cast("array<int>")
-                )
-            ),
-        )
+        .withColumn("__line_keep", explode_barrier(F.col("kind").isNotNull()))
     )
 
-    # Stage 2: ONE extraction expression serves both ssh paths (pure JVM
-    # since round 3 — parsing/exprs.py — so the whole parse stage runs in
-    # whole-stage codegen with zero Python workers); rows whose extraction
-    # fails (no ' from ' / dot-less host) are dropped via an explode-barrier
-    # instead of a filter so the struct is computed once.
+    # Stage 2: ONE extraction expression serves both ssh paths; rows whose
+    # extraction fails (no ' from ' / dot-less host) drop at an
+    # explode_barrier, so the struct is computed once.
     is_ssh_kind = F.col("kind").isin("ssh", "jssh")
     parsed = parsed0.withColumn(
         "ex",
@@ -391,19 +366,13 @@ def extract_events(
             )
         ),
     ).withColumn(
-        "__keep",
-        F.explode(
-            F.when(
-                ~is_ssh_kind | F.col("ex.host").isNotNull(),
-                F.array(F.lit(1)),
-            ).otherwise(F.array().cast("array<int>"))
-        ),
+        "__keep", explode_barrier(~is_ssh_kind | F.col("ex.host").isNotNull())
     )
 
     if persist:
-        # both sinks consume `parsed`; materialize the (filtered, post-UDF)
-        # frame once so the fan-out doesn't re-run the scan+explode+UDF per
-        # sink. Caller unpersists via result["parsed"].unpersist().
+        # both sinks consume `parsed`; materialize the (filtered, extracted)
+        # frame once so the fan-out doesn't re-run the scan+explode+extract
+        # per sink. Caller unpersists via result["parsed"].unpersist().
         from pyspark import StorageLevel
 
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)

@@ -8,7 +8,9 @@ for the 100 TB design point (SURVEY.md §4, §7):
 * **AQE on** (coalesce + skew-join) — attacker hosts are Zipf-distributed
   (one IP is ~900/1000 lines in the reference fixture), so runtime skew
   handling matters at scale.
-* **Arrow execution on** — the parse bank is pandas-UDF based.
+* **Arrow execution on** — the ``applyInPandas``/``mapInPandas`` kernels
+  (ANN top-k, dims resolution, streaming state) and ``toPandas`` move Arrow
+  batches; the parse path itself runs no Python.
 * **shuffle.partitions** sized for the local harness; a real cluster run
   passes ``--conf spark.sql.shuffle.partitions=<2-3x total cores>`` via
   ``spark-submit``.

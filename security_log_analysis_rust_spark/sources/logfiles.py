@@ -20,7 +20,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..parsing.udfs import invalid_user_udf
+from ..parsing.exprs import invalid_user_expr
+from ..pipeline.parse import ssh_ts_expr, tokens_expr
 from ..schemas import INTRUSION_LOG_SCHEMA
 
 
@@ -56,27 +57,13 @@ def read_log_files(spark: SparkSession, log_prefix: str) -> DataFrame:
 
 def parse_auth_lines(lines: DataFrame) -> DataFrame:
     """(line, year) -> parsed ssh events (P2 over arbitrary files)."""
-    toks = F.split(F.trim("line"), r"\s+")
+    line = F.col("line")
     df = (
-        lines.filter(
-            F.col("line").contains("sshd") & F.col("line").contains("Invalid user")
-        )
-        .withColumn("toks", toks)
+        lines.filter(line.contains("sshd") & line.contains("Invalid user"))
+        .withColumn("toks", tokens_expr(line))
         .filter(F.size("toks") >= 10)
-        .withColumn(
-            "datetime",
-            F.try_to_timestamp(
-                F.concat_ws(
-                    " ",
-                    F.get("toks", 0),
-                    F.get("toks", 1),
-                    F.col("year").cast("string"),
-                    F.get("toks", 2),
-                ),
-                F.lit("MMM d yyyy HH:mm:ss"),
-            ),
-        )
-        .withColumn("ex", invalid_user_udf(F.col("line")))
+        .withColumn("datetime", ssh_ts_expr(F.col("year")))
+        .withColumn("ex", invalid_user_expr(line))
         .filter(F.col("datetime").isNotNull() & F.col("ex.host").isNotNull())
     )
     return df.select(

@@ -1,14 +1,12 @@
 """Training-data pipeline operators: dedup, similarity, text analysis,
-multimodal plumbing, corpus assembly.
+corpus assembly.
 
 The exact/minhash/jaccard dedup and langid/quality/token/fingerprint ops are
 exposed (with DuckDB oracles) in ``__spark_entry__``; this package holds the
 operators that need more than single-statement SQL: simhash (band-blocked
 near-dups), the ANN stack (distributed brute-force baseline, hyperplane-LSH
 and IVF top-k with per-bucket numpy kernels, LSH-bucketed cosine near-dup
-dedup), the multimodal decode stack (real PNG/JPEG/GIF/BMP/WAV pixel+sample
-decoders; MP3/AAC/FLAC/Ogg audio header walks; MP4/WebM video structure
-walks), and the corpus-assembly family: C4-style cleanup with corpus-global
+dedup), and the corpus-assembly family: C4-style cleanup with corpus-global
 line dedup (``c4``), sharded Bloom-filter incremental dedup with a streaming
 foreachBatch variant (``bloom``), per-domain stats/caps + deterministic
 mixture thinning (``domains``), bigram-LM perplexity scoring (``lm``),
@@ -22,8 +20,7 @@ quality classifier with GPT-3 Pareto selection (``classifier``, Joulin
 et al. 2017 / Brown et al. 2020 App. A), deterministic shuffle-shard
 training output (``shard``) + token-budget mixture waterfilling
 (``domains.plan_mixture``), distributed spherical k-means for trained
-SemDeDup/IVF centroids (``kmeans``), perceptual image near-dup
-detection + dedup over the in-tree codecs (``imagedup``), and HTML ->
+SemDeDup/IVF centroids (``kmeans``), and HTML ->
 text extraction with a link-density boilerplate signal (``html``) —
 the entry stage for corpora arriving as raw markup. Every
 operator carries a DuckDB oracle — via shared deterministic literals

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .util import explode_barrier
+
 
 def _tokens(text: Column) -> Column:
     """Whitespace tokens, empties dropped (leading/trailing/double space)."""
@@ -72,16 +74,13 @@ def _occurrences(
 ) -> DataFrame:
     """-> (id_col, pos, h): every window occurrence, exploded to rows.
 
-    The token array is materialized under an explode-barrier
-    (``explode(array(lit(1)))`` — the same move as :mod:`.winnow`'s plan
-    note) so the window lambda slices a bound ATTRIBUTE; without the
-    barrier CollapseProject inlines the tokenization into the lambda and
-    Catalyst re-evaluates the whole ``split()`` once PER WINDOW — measured
-    258 s for 5.3M windows at 32 cores versus seconds with the barrier."""
+    The token array is materialized beside an :func:`.util.explode_barrier`
+    so the window lambda slices a bound attribute instead of re-running the
+    ``split()`` once per window."""
     toks = docs.select(
         F.col(id_col),
         _tokens(F.col(text_col)).alias("__tokens"),
-        F.explode(F.array(F.lit(1))).alias("__b"),
+        explode_barrier().alias("__b"),
     )
     return toks.select(
         id_col, F.explode(_windows(F.col("__tokens"), min_len)).alias("w")

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Optional
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def n_input_splits(df: DataFrame) -> int:
@@ -27,3 +30,29 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     if n_input_splits(df) < par:
         return df.repartition(par)
     return df
+
+
+def explode_barrier(keep: Optional[Column] = None) -> Column:
+    """Generator that pins the columns projected beside it: ``explode`` of a
+    one-element array (``keep`` is None) keeps every row; with ``keep`` the
+    array is empty where ``keep`` is not true, so those rows drop.
+
+    Why: Catalyst inlines a projected expression into every consumer
+    (CollapseProject) and pushes a ``filter`` down through projections with
+    the aliased expressions substituted back in (PushDownPredicates). An
+    expression read several times — inside a lambda, or by a routing CASE
+    and its filter — is then re-evaluated per read: once per window for the
+    winnow keys and the exactsubstr tokens (258 s vs seconds for 5.3M
+    windows at 32 cores), once per shingle for the jaccard token arrays
+    (2.5x), and ~8x ``from_json`` and ~10x ``split(trim(line))`` per line
+    in the parse route (``plans/r06/q1_parse_route_before.txt``).
+    CollapseProject does not merge projections across a generator, so each
+    column projected beside the barrier is evaluated once per row, and a
+    row drop made inside the generator is no Filter to push. A ``filter``
+    placed above the barrier on non-generated columns can still be pushed
+    below it.
+    """
+    one = F.array(F.lit(1))
+    if keep is None:
+        return F.explode(one)
+    return F.explode(F.when(keep, one).otherwise(F.array().cast("array<int>")))

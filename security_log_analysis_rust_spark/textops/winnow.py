@@ -15,16 +15,17 @@ selects the same fingerprint the unsharded computation would). Shards
 explode to rows, spreading one huge doc across tasks — the partitioning fix
 and the correctness fix are the same move.
 
-Plan note: the per-shard ``keys`` array is built under an explode-barrier
-(``explode(array(lit(1)))``) so CollapseProject cannot inline it into the
-window lambda — inlined, Catalyst re-evaluates the whole array (all its
-md5s) once PER WINDOW, turning an O(n) pass into O(n^2) hashing.
+Plan note: the per-shard ``keys`` array is built beside an
+:func:`.util.explode_barrier`, so it is hashed once per shard rather than
+once PER WINDOW (O(n) rather than O(n^2) hashing).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .util import explode_barrier
 
 #: bits of the packed key reserved for the (inverted) in-shard position
 POS_BITS = 20
@@ -65,11 +66,8 @@ def winnow_fingerprints(
         * POS_MOD
         + (F.lit(POS_MOD - 1) - p),
     )
-    # explode-barrier: materialize keys once per shard row (see module doc)
     ks = sh.select(
-        F.col(id_col),
-        keys.alias("__keys"),
-        F.explode(F.array(F.lit(1))).alias("__b"),
+        F.col(id_col), keys.alias("__keys"), explode_barrier().alias("__b")
     )
     n_windows = F.size("__keys") - (w - 1)
     mins = F.transform(

@@ -391,3 +391,43 @@ def test_read_sink_self_heals_after_crash(spark, tmp_path_factory, pages_dir):
     got = read_sink(spark, intr_path, INTRUSION_LOG_SCHEMA)
     assert got.count() == n
     assert os.path.isdir(intr_path)
+
+
+def test_manifest_systemd_rows_counted_on_the_write(spark, tmp_path_factory):
+    """Each manifest's ``rows.systemd`` is the row count its split wrote,
+    observed on the write itself — 0 for a split holding no systemd line."""
+    import glob
+    import json
+    import os
+    from datetime import datetime
+
+    root = tmp_path_factory.mktemp("sysd_count")
+    pages = str(root / "pages")
+    ssh = "Jun 12 10:00:00 host sshd[1]: Invalid user bob from 1.2.3.4 port 22"
+    journald = "\n".join(
+        json.dumps({
+            "__REALTIME_TIMESTAMP": str(1655046591494032 + i),
+            "MESSAGE": f"disk error {i}",
+            "UNIT": "a.service",
+        })
+        for i in range(3)
+    )
+    for url, text in [("https://a/auth", ssh), ("https://b/journal", journald)]:
+        spark.createDataFrame(
+            [(url, datetime(2022, 6, 12), text)],
+            "url string, warc_ts timestamp, text string",
+        ).coalesce(1).write.mode("append").parquet(pages)
+
+    sink = str(root / "sink")
+    r = run_incremental(spark, pages, sink, files_per_split=1, filters=())
+    assert r.splits_completed == 2
+    counts = []
+    for p in glob.glob(os.path.join(sink, "_manifests", "*.json")):
+        with open(p) as f:
+            m = json.load(f)
+        split_dir = os.path.join(
+            sink, "systemd_log_messages", f"split={m['split_id']}"
+        )
+        counts.append((m["rows"]["systemd"], spark.read.parquet(split_dir).count()))
+    assert sorted(counts) == [(0, 0), (3, 3)]
+    assert r.rows["systemd"] == 3 and r.rows["intrusion_appended"] == 1

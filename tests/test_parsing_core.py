@@ -234,17 +234,19 @@ def test_truncate_bytes():
     assert truncate_bytes("a" * 20, 15) == "a" * 15
 
 
-def test_hypothesis_udf_kernel_matches_core_oracle():
-    """Property: the vectorized Arrow kernel (parsing/udfs.py) and the
-    pure-Python oracle (parsing/core.py) agree on parse_log_message for
-    arbitrary ASCII lines — the two independent implementations of
-    parse_logs.rs:58-84 can't drift apart on any marker/edge combination."""
-    import pandas as pd
+def test_hypothesis_exprs_match_core_oracle(spark):
+    """Property: the JVM expression (parsing/exprs.py) and the pure-Python
+    oracle (parsing/core.py) agree on parse_log_message for arbitrary ASCII
+    lines, so the pipeline's extraction can't drift from the spec on any
+    marker/edge combination. Hypothesis draws the lines; they are checked
+    in one Spark job rather than one job per example."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from pyspark.sql import functions as F
+
     from security_log_analysis_rust_spark.parsing.core import parse_log_message
-    from security_log_analysis_rust_spark.parsing.udfs import extract_invalid_user
+    from security_log_analysis_rust_spark.parsing.exprs import invalid_user_expr
 
     piece = st.text(
         alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=24
@@ -259,38 +261,33 @@ def test_hypothesis_udf_kernel_matches_core_oracle():
             r = parse_log_message(s)
         except ValueError:  # reference Err path -> pipeline drop
             return (None, None)
-        if r is None:
-            return (None, None)
-        host, user = r
-        return (host, user)
+        return r if r is not None else (None, None)
 
-    @settings(max_examples=300, deadline=None)
+    drawn = []
+
+    @settings(max_examples=300, deadline=None, database=None)
     @given(st.lists(line, min_size=1, max_size=32))
-    def check(lines):
-        got = extract_invalid_user(pd.Series(lines, dtype=object))
-        for i, s in enumerate(lines):
-            exp_host, exp_user = oracle(s)
-            assert got["host"].iloc[i] == exp_host or (
-                got["host"].iloc[i] is None and exp_host is None
-            ), (s, got.iloc[i].tolist(), (exp_host, exp_user))
-            assert got["username"].iloc[i] == exp_user or (
-                got["username"].iloc[i] is None and exp_user is None
-            ), (s, got.iloc[i].tolist(), (exp_host, exp_user))
+    def draw(lines):
+        drawn.extend(lines)
 
-    check()
+    draw()
+    df = spark.createDataFrame(list(enumerate(drawn)), "i long, msg string")
+    rows = df.select("i", invalid_user_expr(F.col("msg")).alias("ex")).collect()
+    got = {r.i: (r.ex.host, r.ex.username) for r in rows}
+    bad = [
+        (s, got[i], oracle(s)) for i, s in enumerate(drawn) if got[i] != oracle(s)
+    ]
+    assert not bad, bad[:5]
 
 
-def test_jvm_expr_matches_pandas_kernel_and_core(spark):
-    """Three-way differential: the pure-JVM expression (parsing/exprs.py,
-    the round-3 hot path), the Arrow pandas kernel, and the pure-Python core
-    oracle agree on parse_log_message over every edge shape."""
-    import pandas as pd
-
+def test_jvm_expr_matches_core(spark):
+    """Differential: the pure-JVM expression (parsing/exprs.py, the parse
+    path) and the pure-Python core oracle agree on parse_log_message over
+    every edge shape, byte truncation of non-ASCII fields included."""
     from pyspark.sql import functions as F
 
     from security_log_analysis_rust_spark.parsing.core import parse_log_message
     from security_log_analysis_rust_spark.parsing.exprs import invalid_user_expr
-    from security_log_analysis_rust_spark.parsing.udfs import extract_invalid_user
 
     cases = [
         "Invalid user admin from 1.2.3.4 port 22",
@@ -305,21 +302,20 @@ def test_jvm_expr_matches_pandas_kernel_and_core(spark):
         "Invalid user " + "u" * 40 + " from " + "1." * 40 + "2 port 9",  # truncation
         "Invalid user x from  1.2.3.4  port 22",               # extra spaces
         "",
+        "Invalid user " + "é" * 7 + " from 1.2.3.4 port 1",    # 14-byte user
+        "Invalid user " + "é" * 8 + " from 1.2.3.4 port 1",    # cut inside é
+        "Invalid user x from " + "é" * 30 + ".com port 1",     # '.' cut off
+        "Invalid user x from a" + "é" * 30 + ".com port 1",    # cut inside é
     ]
-    # core oracle
+
     def core(s):
         try:
             r = parse_log_message(s)
-        except ValueError:  # reference Err path -> pipeline drop
+        except ValueError:  # Err path or a cut inside a character -> drop
             return (None, None)
         return r if r is not None else (None, None)
 
     expected = [core(s) for s in cases]
-    # pandas kernel
-    pdf = extract_invalid_user(pd.Series(cases))
-    got_pandas = list(zip(pdf["host"], pdf["username"]))
-    assert got_pandas == expected
-    # JVM expression
     df = spark.createDataFrame([(i, s) for i, s in enumerate(cases)], "i long, msg string")
     rows = df.select("i", invalid_user_expr(F.col("msg")).alias("ex")).orderBy("i").collect()
     got_jvm = [(r.ex.host, r.ex.username) for r in rows]

@@ -13,36 +13,20 @@ from pyspark.sql import functions as F
 
 from conftest import REFERENCE_AUTH_LOG, REFERENCE_SYSTEMD_JSON
 
-from security_log_analysis_rust_spark.parsing.udfs import invalid_user_udf
+from security_log_analysis_rust_spark.parsing.exprs import invalid_user_expr
+from security_log_analysis_rust_spark.pipeline.parse import level_expr
 from security_log_analysis_rust_spark.pipeline.route import dedup_intrusions
 from security_log_analysis_rust_spark.schemas import JOURNALD_SCHEMA
+from security_log_analysis_rust_spark.sources.logfiles import parse_auth_lines
 
 
 def _auth_events(spark):
-    """parse_log_file semantics via spark.read.text (S1/S3 -> P2)."""
-    lines = spark.read.text(REFERENCE_AUTH_LOG).withColumnRenamed("value", "line")
-    toks = F.split(F.trim("line"), r"\s+")
-    df = (
-        lines.filter(F.col("line").contains("sshd") & F.col("line").contains("Invalid user"))
-        .withColumn("toks", toks)
-        .filter(F.size("toks") >= 10)
-        .withColumn(
-            "datetime",
-            F.try_to_timestamp(
-                F.concat_ws(
-                    " ", F.get("toks", 0), F.get("toks", 1), F.lit("2023"), F.get("toks", 2)
-                ),
-                F.lit("MMM d yyyy HH:mm:ss"),
-            ),
-        )
-        .withColumn("ex", invalid_user_udf(F.col("line")))
-        .filter(F.col("datetime").isNotNull() & F.col("ex.host").isNotNull())
+    """parse_log_file semantics (S1/S3 -> P2) through ``parse_auth_lines``,
+    with every line's year pinned to 2023."""
+    lines = spark.read.text(REFERENCE_AUTH_LOG).select(
+        F.col("value").alias("line"), F.lit(2023).alias("year")
     )
-    return df.select(
-        "datetime",
-        F.col("ex.host").alias("host"),
-        F.col("ex.username").alias("username"),
-    )
+    return parse_auth_lines(lines)
 
 
 @pytest.mark.skipif(not os.path.exists(REFERENCE_AUTH_LOG), reason="fixture absent")
@@ -68,14 +52,8 @@ def test_spark_systemd_24_errors(spark):
     lines = spark.read.text(REFERENCE_SYSTEMD_JSON).withColumnRenamed("value", "line")
     lines = lines.filter(F.length(F.trim("line")) > 0)
     rec = F.from_json("line", JOURNALD_SCHEMA)
-    level = (
-        F.when(F.col("line").contains("err") | F.col("line").contains("ERR"), "error")
-        .when(F.col("line").contains("warn") | F.col("line").contains("WARN"), "warn")
-        .when(F.col("line").contains("info") | F.col("line").contains("INFO"), "info")
-        .when(F.col("line").contains("debug") | F.col("line").contains("DEBUG"), "debug")
-    )
     df = lines.select(
-        level.alias("log_level"),
+        level_expr(F.col("line")).alias("log_level"),
         F.timestamp_micros(
             rec["__REALTIME_TIMESTAMP"].try_cast("long")
         ).alias("log_timestamp"),
@@ -137,21 +115,18 @@ def test_spark_journald_golden_single(spark):
         '"MESSAGE":"Invalid user ark from 43.154.144.211 port 42608"}'
     )
     df = spark.createDataFrame([(line,)], "line string").select(
-        invalid_user_udf(F.get_json_object("line", "$.MESSAGE")).alias("ex")
+        invalid_user_expr(F.get_json_object("line", "$.MESSAGE")).alias("ex")
     )
     row = df.collect()[0]
     assert row.ex.host == "43.154.144.211"
     assert row.ex.username == "ark"
 
 
-def test_udf_all_null_batch(spark):
-    """Regression: Arrow hands the UDF a float64(NaN) column when every
-    value in a batch is null — the bank must not crash on it."""
-    from pyspark.sql import functions as F
-
+def test_invalid_user_expr_all_null_column(spark):
+    """An all-null message column extracts to all-null fields."""
     df = spark.createDataFrame([("noise",), ("more noise",)], "line string")
     out = df.select(
-        invalid_user_udf(F.when(F.lit(False), F.col("line"))).alias("ex")
+        invalid_user_expr(F.when(F.lit(False), F.col("line"))).alias("ex")
     ).collect()
     assert all(r.ex.host is None and r.ex.username is None for r in out)
 
@@ -180,3 +155,40 @@ def test_extract_events_without_filters_keeps_every_journald_line(spark):
     assert extract_events(pages)["systemd"].count() == 1  # default filters
     assert extract_events(pages, filters=())["systemd"].count() == 2
     assert parse_journald_lines(pages_to_lines(pages), filters=())[1].count() == 2
+
+
+def test_apache_host_truncated_by_bytes_like_core(spark):
+    """CLF hosts are cut to 60 BYTES, as ``core.parse_log_line_apache``
+    specifies: 30 two-byte characters fill the limit, so ``.com`` is cut
+    off and the line drops (it was emitted under a 60-character cut); a cut
+    through a multi-byte character drops the line too (core raises). Both
+    parse paths agree with core."""
+    from datetime import datetime
+
+    from security_log_analysis_rust_spark.parsing.core import parse_log_line_apache
+    from security_log_analysis_rust_spark.pipeline.parse import (
+        extract_events,
+        extract_events_union,
+    )
+
+    rest = ' - - [12/Jun/2022:10:00:00 +0000] "GET / HTTP/1.1" 200 512'
+    hosts = ["é" * 30 + ".com", "e" * 30 + ".com", "a" + "é" * 30 + ".com",
+             "é" * 20 + ".com"]
+    lines = [h + rest for h in hosts]
+
+    def core(line):
+        try:
+            r = parse_log_line_apache(line)
+        except ValueError:  # cut inside a character -> pipeline drop
+            return None
+        return r and r.host
+
+    expected = sorted(h for h in map(core, lines) if h is not None)
+    assert expected == sorted(["e" * 30 + ".com", "é" * 20 + ".com"])
+    pages = spark.createDataFrame(
+        [("https://example.org/access", datetime(2022, 6, 12), "\n".join(lines))],
+        "url string, warc_ts timestamp, text string",
+    )
+    for parse in (extract_events, extract_events_union):
+        got = sorted(r.host for r in parse(pages)["events"].collect())
+        assert got == expected, parse.__name__

@@ -1,4 +1,4 @@
-"""Tests for simhash, ANN (brute-force + LSH), and multimodal plumbing."""
+"""Tests for simhash, ANN, winnowing, connected components and the training corpus."""
 
 from __future__ import annotations
 
@@ -120,214 +120,6 @@ def test_auto_n_bits_grows_with_corpus():
     assert auto_n_bits(1 << 30) == 18  # 1B vectors
     # expected bucket size stays ~target as N grows 1024x
     assert auto_n_bits(1 << 30) - auto_n_bits(1 << 20) == 10
-
-
-def test_multimodal_decode_contract(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        N_FEATURES,
-        decode_media,
-        sample_frames,
-        synthetic_media,
-    )
-
-    media = synthetic_media(spark, n=64)
-    dec = decode_media(media).toPandas()
-    assert len(dec) == 64
-    by_status = dec.groupby("ok").size().to_dict()
-    assert by_status.get("null", 0) > 0 and by_status.get("corrupt", 0) > 0
-    ok = dec[dec["ok"] == "ok"]
-    assert (ok["width"] >= 64).all() and (ok["n_channels"] == 3).all()
-    assert all(len(f) == N_FEATURES for f in ok["features"])
-    # determinism across runs
-    dec2 = decode_media(media).toPandas().sort_values("media_id")
-    assert list(dec2["width"].fillna(-1)) == list(
-        dec.sort_values("media_id")["width"].fillna(-1)
-    )
-
-    frames = sample_frames(media).toPandas()
-    assert (frames.groupby("media_id").size() <= 5).all()
-    assert frames["frame_fingerprint"].str.len().eq(32).all()
-
-
-def _tiny_png(width: int, height: int, color_type: int = 6) -> bytes:
-    """Build a real, spec-valid PNG byte string with stdlib only."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-    n_ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    raw = b"".join(b"\x00" + b"\x7f" * (width * n_ch) for _ in range(height))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_parses_real_png_header(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        parse_png_header,
-    )
-
-    png = _tiny_png(7, 5, color_type=6)
-    assert parse_png_header(png) == (7, 5, 4)
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(png), "image/png"),
-         (2, "image", bytearray(b"not a png, just bytes"), "image/png")],
-        MEDIA_SCHEMA,
-    )
-    got = {r.media_id: r for r in decode_media(media).collect()}
-    assert (got[1].width, got[1].height, got[1].n_channels) == (7, 5, 4)
-    assert got[1].ok == "ok"
-    assert got[2].ok == "ok" and got[2].n_channels == 3  # fake-decode fallback
-
-
-def test_parse_wav_header():
-    import struct
-
-    from security_log_analysis_rust_spark.textops.multimodal import parse_wav_header
-
-    fmt = struct.pack("<HHIIHH", 1, 2, 44100, 44100 * 2 * 2, 4, 16)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-    )
-    assert parse_wav_header(wav) == (2, 44100, 16)
-    assert parse_wav_header(b"RIFFxxxxNOPE") is None
-    assert parse_wav_header(b"short") is None
-
-
-def _encode_png(pixels, filters):
-    """Forward PNG encoder (test-only): applies the given per-row filter
-    types, so the decoder's unfiltering is exercised against known pixels."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import _paeth
-
-    h, w, c = pixels.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-
-    def chunk(tag, data):
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data) & 0xFFFFFFFF)
-        )
-
-    raw = b""
-    prev = np.zeros(w * c, dtype=np.int32)
-    for y in range(h):
-        f = filters[y % len(filters)]
-        line = pixels[y].reshape(-1).astype(np.int32)
-        filt = np.zeros(w * c, dtype=np.int32)
-        for x in range(w * c):
-            left = int(line[x - c]) if x >= c else 0
-            up = int(prev[x])
-            ul = int(prev[x - c]) if x >= c else 0
-            pred = {0: 0, 1: left, 2: up, 3: (left + up) >> 1,
-                    4: _paeth(left, up, ul)}[f]
-            filt[x] = (int(line[x]) - pred) & 0xFF
-        raw += bytes([f]) + filt.astype(np.uint8).tobytes()
-        prev = line
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_png_exact_pixels_all_filters(spark):
-    """Real PNG pixel decode: every filter type (None/Sub/Up/Average/Paeth)
-    round-trips to the exact source pixels, and decode_media's features are
-    derived from those real pixels."""
-    import random
-
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        decode_png,
-        image_features,
-    )
-
-    rng = random.Random(3)
-    for c in (1, 2, 3, 4):
-        pixels = np.array(
-            [[[rng.randrange(256) for _ in range(c)] for _ in range(9)]
-             for _ in range(10)],
-            dtype=np.uint8,
-        )
-        png = _encode_png(pixels, filters=[0, 1, 2, 3, 4])
-        got = decode_png(png)
-        assert got is not None and got.shape == (10, 9, c)
-        assert (got == pixels).all(), f"channels={c}"
-
-    # through the Spark pipeline: dims + features come from the real pixels
-    pixels = np.array(
-        [[[rng.randrange(256) for _ in range(3)] for _ in range(8)]
-         for _ in range(8)],
-        dtype=np.uint8,
-    )
-    png = _encode_png(pixels, filters=[4, 3, 2, 1, 0])
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(png), "image/png")], MEDIA_SCHEMA
-    )
-    row = decode_media(media).collect()[0]
-    assert (row.width, row.height, row.n_channels) == (8, 8, 3)
-    expected = image_features(pixels)
-    assert np.allclose(row.features, expected, atol=1e-5)
-
-
-def test_decode_wav_exact_samples(spark):
-    """Real WAV PCM decode: the exact int16 samples come back, and
-    decode_audio reports rate/channels/sample-count + windowed RMS."""
-    import struct
-
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_audio,
-        decode_wav,
-    )
-
-    samples = np.array(
-        [[100, -100], [2000, -2000], [-32768, 32767], [0, 5]], dtype="<i2"
-    )
-    data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 2, 8000, 8000 * 2 * 2, 4, 16)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    rate, got = decode_wav(wav)
-    assert rate == 8000 and (got == samples).all()
-
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(wav), "audio/wav"),
-         (2, "audio", bytearray(b"not audio at all"), "audio/wav"),
-         (3, "video", bytearray(wav), "video/x")],  # wrong kind: filtered out
-        MEDIA_SCHEMA,
-    )
-    rows = {r.media_id: r for r in decode_audio(media).collect()}
-    assert set(rows) == {1, 2}
-    ok = rows[1]
-    assert (ok.sample_rate, ok.n_channels, ok.n_samples, ok.ok) == (8000, 2, 4, "ok")
-    assert len(ok.features) == 16 and all(0 <= f <= 1 for f in ok.features)
-    assert rows[2].ok == "corrupt"
 
 
 def test_simhash_bucket_cap_bounds_work(spark):
@@ -564,274 +356,6 @@ def test_ann_bank_bits_contract(spark, emb):
     assert capped.count() > 0
 
 
-def test_jpeg_roundtrip_gray_and_color():
-    """Baseline JPEG decoder vs an independent forward encoder (Q=1):
-    solid blocks are bit-exact, arbitrary pixels within coefficient-
-    rounding tolerance; non-multiple-of-8 dims crop correctly."""
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.jpeg import (
-        decode_jpeg,
-        parse_jpeg_header,
-    )
-    from util_jpeg import encode_color, encode_gray
-
-    solid = np.full((8, 8), 100, dtype=np.uint8)
-    dec = decode_jpeg(encode_gray(solid))
-    assert dec.shape == (8, 8, 1)
-    assert (dec[:, :, 0] == 100).all()  # DC-only block: exact
-
-    rng = np.random.default_rng(0)
-    img = rng.integers(0, 256, (13, 21), dtype=np.uint8)
-    payload = encode_gray(img)
-    assert parse_jpeg_header(payload) == (21, 13, 1)
-    d = decode_jpeg(payload)
-    assert d.shape == (13, 21, 1)
-    assert np.abs(d[:, :, 0].astype(int) - img.astype(int)).max() <= 1
-
-    rgb = rng.integers(0, 256, (10, 14, 3), dtype=np.uint8)
-    d3 = decode_jpeg(encode_color(rgb))
-    assert d3.shape == (10, 14, 3)
-    assert np.abs(d3.astype(int) - rgb.astype(int)).max() <= 2
-
-    # 4:2:0 subsampling: constant color survives the chroma downsample
-    flat = np.full((20, 24, 3), (30, 90, 200), dtype=np.uint8)
-    d4 = decode_jpeg(encode_color(flat, subsample=True))
-    assert d4.shape == (20, 24, 3)
-    assert np.abs(d4.astype(int) - flat.astype(int)).max() <= 1
-
-
-def test_jpeg_restart_markers_and_corrupt_inputs():
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.jpeg import decode_jpeg
-    from util_jpeg import encode_gray
-
-    rng = np.random.default_rng(1)
-    img = rng.integers(0, 256, (16, 32), dtype=np.uint8)  # 8 MCUs
-    payload = encode_gray(img, restart_interval=3)
-    assert b"\xff\xd0" in payload  # RST0 actually emitted
-    d = decode_jpeg(payload)
-    assert d is not None
-    assert np.abs(d[:, :, 0].astype(int) - img.astype(int)).max() <= 1
-
-    assert decode_jpeg(b"\xff\xd8\xff\xd9") is None  # no frame
-    assert decode_jpeg(b"not a jpeg at all..") is None
-    assert decode_jpeg(payload[: len(payload) // 2]) is None  # truncated
-    # progressive (SOF2) declines pixel decode but header still parses
-    from security_log_analysis_rust_spark.textops.jpeg import parse_jpeg_header
-
-    prog = bytearray(payload)
-    sof = prog.find(b"\xff\xc0")
-    prog[sof + 1] = 0xC2
-    assert decode_jpeg(bytes(prog)) is None
-    assert parse_jpeg_header(bytes(prog)) == (32, 16, 1)
-
-
-def test_decode_media_routes_jpeg_and_kind(spark):
-    """decode_media: JPEG rows get REAL pixel decode (features from actual
-    pixels); non-image kinds skip the image decoders entirely."""
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-    from util_jpeg import encode_gray
-
-    img = np.full((8, 16), 200, dtype=np.uint8)
-    payload = encode_gray(img)
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(payload), "image/jpeg"),
-            (2, "audio", bytearray(payload), "audio/x-fake"),  # same bytes!
-        ],
-        MEDIA_SCHEMA,
-    )
-    got = {r.media_id: r for r in decode_media(media).collect()}
-    assert (got[1].width, got[1].height, got[1].n_channels) == (16, 8, 1)
-    # solid-200 image: every grid-cell luminance feature is exactly 200
-    assert all(abs(f - 200.0) < 1e-6 for f in got[1].features)
-    # the SAME payload under kind=audio routes to the fake decoder
-    assert got[2].n_channels == 3 and got[2].width != 16
-
-
-def test_wav_fmt_chunk_after_list_chunk():
-    """ADVICE r3: a LIST/INFO chunk before 'fmt ' (common from real
-    encoders) must not break the fmt parse."""
-    import struct
-
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        decode_wav,
-        parse_wav_header,
-    )
-
-    samples = (np.sin(np.linspace(0, 20, 400)) * 20000).astype("<i2")
-    data = samples.tobytes()
-    info = b"INFOIART" + struct.pack("<I", 4) + b"test"
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * 2, 2, 16)
-    body = (
-        b"WAVE"
-        + b"LIST" + struct.pack("<I", len(info)) + info
-        + b"fmt " + struct.pack("<I", 16) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    wav = b"RIFF" + struct.pack("<I", len(body)) + body
-    assert parse_wav_header(wav) == (1, 8000, 16)
-    rate, decoded = decode_wav(wav)
-    assert rate == 8000
-    assert decoded.shape == (400, 1)
-    assert (decoded[:, 0] == samples).all()
-
-
-def test_png_max_samples_contract():
-    """Oversize PNGs decline pixel decode (documented cap) instead of
-    burning unbounded CPU in the sequential unfilter loops."""
-    from security_log_analysis_rust_spark.textops.multimodal import decode_png
-
-    png = _tiny_png(64, 64, color_type=2)
-    assert decode_png(png) is not None
-    assert decode_png(png, max_samples=64 * 64 * 3 - 1) is None
-
-
-def test_gif_roundtrip_paths():
-    """GIF decoder vs an independent test encoder: plain, interlaced,
-    transparent, 2-color, and REAL LZW (dictionary growth, width bumps,
-    4096-entry table-full freeze) all reproduce exact pixels."""
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.gif import (
-        decode_gif,
-        parse_gif_header,
-    )
-    from util_gif import encode_gif
-
-    rng = np.random.default_rng(0)
-    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
-    idx = rng.integers(0, 16, (13, 21), dtype=np.uint8)
-    g = encode_gif(idx, pal)
-    assert parse_gif_header(g) == (21, 13, 3)
-    assert (decode_gif(g) == pal[idx]).all()
-    assert (decode_gif(encode_gif(idx, pal, interlace=True)) == pal[idx]).all()
-    # transparency: transparent pixels take the background palette entry
-    got = decode_gif(encode_gif(idx, pal, transparent=5))
-    assert (got == pal[np.where(idx == 5, 0, idx)]).all()
-    # real LZW incl. the 4096-code table-full freeze (256x256 tiled)
-    big = np.tile(rng.integers(0, 4, (16, 16), dtype=np.uint8), (16, 16))
-    assert (decode_gif(encode_gif(big, pal[:4], compress=True)) == pal[:4][big]).all()
-    noise = rng.integers(0, 16, (64, 64), dtype=np.uint8)
-    assert (decode_gif(encode_gif(noise, pal, compress=True)) == pal[noise]).all()
-    assert decode_gif(b"GIF89a" + b"\x00" * 20) is None
-    assert decode_gif(b"not a gif") is None
-
-
-def test_decode_media_routes_gif(spark):
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-    from util_gif import encode_gif
-
-    pal = np.array([[10, 20, 30], [200, 200, 200]], dtype=np.uint8)
-    idx = np.zeros((8, 16), dtype=np.uint8)
-    idx[:, 8:] = 1
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_gif(idx, pal)), "image/gif")],
-        MEDIA_SCHEMA,
-    )
-    row = decode_media(media).collect()[0]
-    assert (row.width, row.height, row.n_channels) == (16, 8, 3)
-    # left half luminance 20, right half 200: grid features reflect pixels
-    assert abs(row.features[0] - 20.0) < 1e-4
-    assert abs(row.features[3] - 200.0) < 1e-4
-
-
-def test_jpeg_gif_property_roundtrip():
-    """Property check (hypothesis): arbitrary small images survive the
-    encode->decode round trip — JPEG within coefficient-rounding tolerance,
-    GIF exactly."""
-    import numpy as np
-    from hypothesis import given, settings, strategies as st
-
-    from security_log_analysis_rust_spark.textops.gif import decode_gif
-    from security_log_analysis_rust_spark.textops.jpeg import decode_jpeg
-    from util_gif import encode_gif
-    from util_jpeg import encode_gray
-
-    @settings(max_examples=20, deadline=None)
-    @given(
-        st.integers(1, 40), st.integers(1, 40), st.integers(0, 2**32 - 1),
-        st.booleans(),
-    )
-    def check(h, w, seed, interlace):
-        rng = np.random.default_rng(seed)
-        gray = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        d = decode_jpeg(encode_gray(gray))
-        assert d is not None and d.shape == (h, w, 1)
-        assert np.abs(d[:, :, 0].astype(int) - gray.astype(int)).max() <= 1
-
-        pal = rng.integers(0, 256, (8, 3), dtype=np.uint8)
-        idx = rng.integers(0, 8, (h, w), dtype=np.uint8)
-        g = decode_gif(encode_gif(idx, pal, interlace=interlace, compress=True))
-        assert g is not None and (g == pal[idx]).all()
-
-    check()
-
-
-def test_wav_g711_mulaw_alaw_decode():
-    """G.711 companded WAV (format tags 7/6) expands to linear int16 via
-    the standard LUTs — anchored to known byte values and sign-symmetric."""
-    import struct
-
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        _alaw_lut,
-        _mulaw_lut,
-        decode_wav,
-    )
-
-    mu, al = _mulaw_lut(), _alaw_lut()
-    assert mu[0xFF] == 0 and mu[0x00] == -32124 and mu[0x80] == 32124
-    assert al[0x55] == -8 and al[0xD5] == 8 and al[0x2A] == -32256
-    assert (mu[np.arange(128)] == -mu[np.arange(128) + 128]).all()
-    assert (al[np.arange(128)] == -al[np.arange(128) + 128]).all()
-
-    def wav(fmt_tag, data):
-        fmt = struct.pack("<HHIIHH", fmt_tag, 1, 8000, 8000, 1, 8)
-        body = (
-            b"WAVE" + b"fmt " + struct.pack("<I", 16) + fmt
-            + b"data" + struct.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + struct.pack("<I", len(body)) + body
-
-    payload = bytes(range(256))
-    rate, dec = decode_wav(wav(7, payload))
-    assert rate == 8000 and (dec[:, 0] == mu[np.arange(256)]).all()
-    rate, dec = decode_wav(wav(6, payload))
-    assert (dec[:, 0] == al[np.arange(256)]).all()
-    # IEEE float32 (tag 3): scaled + clipped to int16
-    import struct as _st
-
-    floats = np.array([0.0, 0.5, -0.5, 1.0, -1.0, 2.0], dtype="<f4")
-
-    def wavf(data):
-        fmt = _st.pack("<HHIIHH", 3, 1, 8000, 8000 * 4, 4, 32)
-        body = (
-            b"WAVE" + b"fmt " + _st.pack("<I", 16) + fmt
-            + b"data" + _st.pack("<I", len(data)) + data
-        )
-        return b"RIFF" + _st.pack("<I", len(body)) + body
-
-    rate, dec = decode_wav(wavf(floats.tobytes()))
-    assert list(dec[:, 0]) == [0, 16384, -16384, 32767, -32767, 32767]
-    assert decode_wav(wav(2, payload)) is None  # ADPCM: out of scope
-
-
 def test_star_contraction_random_graph_differential(spark):
     """Randomized differential: on seeded Erdos-Renyi-ish graphs the
     large-star/small-star fallback and min-label propagation produce
@@ -862,171 +386,6 @@ def test_star_contraction_random_graph_differential(spark):
             for r in connected_components(nodes, pairs, max_iter=0).collect()
         }
         assert prop == stars, f"seed {seed} diverged"
-
-
-def test_bmp_roundtrip():
-    """BMP decoder: 24-bit bottom-up, 32-bit, top-down, and row padding all
-    reproduce exact pixels from a hand-built spec-valid file."""
-    import struct
-
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        decode_bmp,
-        parse_bmp_header,
-    )
-
-    def encode_bmp(rgb, bits=24, topdown=False):
-        h, w, _ = rgb.shape
-        ch = bits // 8
-        stride = (w * ch + 3) & ~3
-        rows = bytearray()
-        order = range(h) if topdown else range(h - 1, -1, -1)
-        for y in order:
-            row = bytearray()
-            for x in range(w):
-                r, g, b = rgb[y, x]
-                row += bytes([b, g, r] + ([255] if ch == 4 else []))
-            row += b"\x00" * (stride - len(row))
-            rows += row
-        dib = struct.pack(
-            "<IiiHHIIiiII", 40, w, (-h if topdown else h), 1, bits, 0,
-            len(rows), 2835, 2835, 0, 0,
-        )
-        off = 14 + len(dib)
-        head = b"BM" + struct.pack("<IHHI", off + len(rows), 0, 0, off)
-        return head + dib + bytes(rows)
-
-    rng = np.random.default_rng(0)
-    rgb = rng.integers(0, 256, (5, 7, 3), dtype=np.uint8)  # odd width: padding
-    for bits in (24, 32):
-        for topdown in (False, True):
-            payload = encode_bmp(rgb, bits=bits, topdown=topdown)
-            assert parse_bmp_header(payload)[:2] == (7, 5)
-            d = decode_bmp(payload)
-            assert d is not None and (d[:, :, :3] == rgb).all()
-            if bits == 32:
-                assert (d[:, :, 3] == 255).all()
-    assert decode_bmp(b"BMnotvalid") is None
-    assert decode_bmp(b"\x00" * 60) is None
-
-
-# --- MP3 frame-header walk --------------------------------------------------
-
-_MP3_SR_IDX = {3: {44100: 0, 48000: 1, 32000: 2},
-               2: {22050: 0, 24000: 1, 16000: 2},
-               0: {11025: 0, 12000: 1, 8000: 2}}
-
-
-def _mp3_frame(kbps, sr=44100, version_bits=3, layer=3, padding=0, mono=False):
-    """One spec-shaped MPEG audio frame: valid 4-byte header + zero fill to
-    the computed frame length (content bytes are irrelevant to the walk)."""
-    from security_log_analysis_rust_spark.textops.mp3 import _BITRATES
-
-    vgroup = 0 if version_bits == 3 else 1
-    br_idx = _BITRATES[(vgroup, layer)].index(kbps)
-    b1 = 0xE0 | (version_bits << 3) | ((4 - layer) << 1) | 1
-    b2 = (br_idx << 4) | (_MP3_SR_IDX[version_bits][sr] << 2) | (padding << 1)
-    b3 = (3 << 6) if mono else 0
-    if layer == 1:
-        spf, flen = 384, (12 * kbps * 1000 // sr + padding) * 4
-    else:
-        spf = 1152 if (layer == 2 or vgroup == 0) else 576
-        flen = spf // 8 * kbps * 1000 // sr + padding
-    return bytes([0xFF, b1, b2, b3]) + b"\x00" * (flen - 4), spf
-
-
-def test_mp3_header_walk_cbr():
-    from security_log_analysis_rust_spark.textops.mp3 import parse_mp3
-
-    frame, spf = _mp3_frame(128)
-    # ID3v2 prefix (syncsafe size) + 10 frames + ID3v1 trailer
-    id3_body = b"\x00" * 300
-    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 300 >> 7, 300 & 0x7F]) + id3_body
-    payload = id3 + frame * 10 + b"TAG" + b"\x00" * 125
-    info = parse_mp3(payload)
-    assert info is not None
-    assert (info.version, info.layer) == ("MPEG1", 3)
-    assert (info.sample_rate, info.n_channels) == (44100, 2)
-    assert info.n_frames == 10 and info.n_samples == 10 * spf
-    assert abs(info.duration_s - 10 * spf / 44100) < 1e-9
-    assert not info.vbr
-    # frame-length-weighted mean bitrate is within a slot of nominal
-    assert abs(info.bitrate_kbps - 128) < 2
-    # truncated final frame is dropped, walked prefix kept
-    assert parse_mp3(frame * 3 + frame[:50]).n_frames == 3
-
-
-def test_mp3_vbr_padding_and_mpeg2():
-    from security_log_analysis_rust_spark.textops.mp3 import parse_mp3
-
-    f128, _ = _mp3_frame(128)
-    f192p, _ = _mp3_frame(192, padding=1)
-    info = parse_mp3(f128 + f192p + f128 + f192p)
-    assert info is not None and info.vbr
-    assert info.frame_bitrates == [128, 192, 128, 192]
-    # MPEG-2 Layer III: 576 samples/frame, mono, 22050 Hz
-    f2, spf2 = _mp3_frame(64, sr=22050, version_bits=2, mono=True)
-    assert spf2 == 576
-    info2 = parse_mp3(f2 * 5)
-    assert (info2.version, info2.sample_rate, info2.n_channels) == ("MPEG2", 22050, 1)
-    assert info2.n_samples == 5 * 576
-    # Layer II MPEG-1: 1152 samples/frame
-    fl2, spfl2 = _mp3_frame(192, layer=2)
-    assert spfl2 == 1152 and parse_mp3(fl2 * 2).layer == 2
-
-
-def test_mp3_rejects_non_mp3():
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.mp3 import parse_mp3
-
-    rng = np.random.default_rng(7)
-    assert parse_mp3(bytes(rng.integers(0, 255, 4096, dtype=np.uint8))) is None
-    frame, _ = _mp3_frame(128)
-    assert parse_mp3(frame) is None  # single frame: below _MIN_FRAMES
-    assert parse_mp3(b"") is None
-    # false-positive sync whose next "frame" disagrees on version/rate
-    other, _ = _mp3_frame(64, sr=22050, version_bits=2)
-    assert parse_mp3(frame + other) is None
-    # junk before the first sync word is scanned past
-    assert parse_mp3(b"\x01\x02\x03junkjunk" + frame * 2) is not None
-
-
-def test_decode_audio_routes_mp3(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        N_FEATURES,
-        decode_audio,
-    )
-
-    frame, spf = _mp3_frame(128)
-    mp3_payload = frame * 32
-    import numpy as np
-    import struct
-
-    # minimal valid 16-bit PCM WAV
-    samples = np.arange(-100, 100, dtype="<i2")
-    data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(wav), "audio/wav"),
-         (2, "audio", bytearray(mp3_payload), "audio/mpeg"),
-         (3, "audio", bytearray(b"not audio at all, just text bytes"), "audio/x-junk")],
-        "media_id long, kind string, payload binary, mime string",
-    )
-    rows = {r.media_id: r for r in decode_audio(media).collect()}
-    assert rows[1].ok == "ok" and rows[1].sample_rate == 8000
-    assert rows[2].ok == "headers"
-    assert rows[2].sample_rate == 44100 and rows[2].n_channels == 2
-    assert rows[2].n_samples == 32 * spf
-    assert len(rows[2].features) == N_FEATURES
-    assert all(abs(f - 128.0 / 320.0) < 1e-6 for f in rows[2].features)
-    assert rows[3].ok == "corrupt"
 
 
 def test_star_contraction_ring_and_path_10k(spark):
@@ -1109,270 +468,6 @@ def test_dup_clusters_oracle_parity_through_contraction(spark):
         con.close()
     problems = compare_frames(cc.toPandas(), oracle)
     assert not problems, "; ".join(p[:400] for p in problems)
-
-
-def test_decode_media_routes_mp4_headers(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-    from util_mp4 import build_mp4
-
-    samples = [b"x%02d" % i * (20 + i) for i in range(6)]
-    payload, ranges = build_mp4(samples, width=320, height=180)
-    media = spark.createDataFrame(
-        [
-            (1, "video", bytearray(payload), "video/mp4"),
-            (2, "video", bytearray(b"notanmp4" * 16), "video/x-fake"),
-        ],
-        MEDIA_SCHEMA,
-    )
-    rows = {r.media_id: r for r in decode_media(media).collect()}
-    assert rows[1].ok == "headers"
-    assert (rows[1].width, rows[1].height, rows[1].n_channels) == (320, 180, 3)
-    # feature vector is the real sample-size profile, normalized by max
-    # (independently recomputed: mean sample size per equal window / peak)
-    import numpy as np
-
-    sizes = np.array([sz for _, sz in ranges], dtype=float)
-    bounds = np.linspace(0, len(sizes), 16 + 1).astype(int)
-    expected = [
-        sizes[a:b].mean() / sizes.max() if b > a else 0.0
-        for a, b in zip(bounds[:-1], bounds[1:])
-    ]
-    assert np.allclose(rows[1].features, expected, atol=1e-6)
-    assert max(rows[1].features) == 1.0  # the peak-size sample's window
-    # a video payload that is not ISO-BMFF keeps the uniform fake contract
-    assert rows[2].ok == "ok"
-
-
-def test_sample_frames_real_mp4_samples(spark):
-    import hashlib
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        sample_frames,
-    )
-    from util_mp4 import build_mp4
-
-    samples = [bytes([65 + i]) * (10 + 3 * i) for i in range(7)]
-    payload, _ = build_mp4(samples)
-    media = spark.createDataFrame(
-        [
-            (1, "video", bytearray(payload), "video/mp4"),
-            (2, "video", bytearray(b"Z" * 64), "video/x-fake"),
-        ],
-        MEDIA_SCHEMA,
-    )
-    out = sample_frames(media, every_n=2, max_frames=3).collect()
-    real = sorted(
-        [(r.frame_no, r.frame_fingerprint) for r in out if r.media_id == 1]
-    )
-    # every 2nd actual sample, fingerprinted from its mdat byte range
-    assert real == [
-        (i, hashlib.md5(samples[i]).hexdigest()) for i in (0, 2, 4)
-    ]
-    # fake fallback still emits the slice fingerprints for non-MP4 payloads
-    fake = sorted(
-        [(r.frame_no, r.frame_fingerprint) for r in out if r.media_id == 2]
-    )
-    assert len(fake) == 3
-    assert fake[0] == (0, hashlib.md5(b"Z" * 2).hexdigest())
-
-
-def test_decode_media_progressive_jpeg_real_pixels(spark):
-    import numpy as np
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-    from util_jpeg_prog import encode_progressive
-
-    img = np.full((24, 16), 200, dtype=np.uint8)
-    img[:, :8] = 40  # left half dark, right half bright
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(encode_progressive(img)), "image/jpeg")],
-        MEDIA_SCHEMA,
-    )
-    row = decode_media(media).collect()[0]
-    # REAL pixel decode now (ok='ok'), not the header-only fallback
-    assert row.ok == "ok"
-    assert (row.width, row.height, row.n_channels) == (16, 24, 1)
-    assert abs(row.features[0] - 40.0) < 3.0
-    assert abs(row.features[3] - 200.0) < 3.0
-
-
-def test_decode_audio_routes_adts_aac(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        N_FEATURES,
-        decode_audio,
-    )
-    from test_adts import build_adts
-
-    aac = build_adts([120] * 16, sr_idx=3, channels=2)  # 48 kHz stereo
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(aac), "audio/aac"),
-         (2, "audio", bytearray(b"Z" * 200), "audio/x-junk")],
-        "media_id long, kind string, payload binary, mime string",
-    )
-    rows = {r.media_id: r for r in decode_audio(media).collect()}
-    assert rows[1].ok == "headers"
-    assert rows[1].sample_rate == 48000 and rows[1].n_channels == 2
-    assert rows[1].n_samples == 16 * 1024
-    assert len(rows[1].features) == N_FEATURES
-    # equal-size frames -> flat unit profile
-    assert all(abs(f - 1.0) < 1e-6 for f in rows[1].features)
-    assert rows[2].ok == "corrupt"
-
-
-def test_decode_media_and_sample_frames_route_webm(spark):
-    import hashlib
-
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        sample_frames,
-    )
-    from test_webm import build_webm
-
-    frames = [bytes([70 + i]) * (30 + 10 * i) for i in range(6)]
-    payload = build_webm(video=("V_VP9", 640, 360), video_frames=frames)
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(payload), "video/webm")], MEDIA_SCHEMA
-    )
-    row = decode_media(media).collect()[0]
-    assert row.ok == "headers"
-    assert (row.width, row.height) == (640, 360)
-    assert row.n_channels is None  # unknowable before frame decode
-    assert max(row.features) == 1.0  # real block-size profile
-
-    out = sample_frames(media, every_n=2, max_frames=3).collect()
-    got = sorted((r.frame_no, r.frame_fingerprint) for r in out)
-    assert got == [
-        (i, hashlib.md5(frames[i]).hexdigest()) for i in (0, 2, 4)
-    ]
-
-
-def test_decode_audio_routes_flac_and_ogg(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        N_FEATURES,
-        decode_audio,
-    )
-    from test_ogg_flac import build_flac, ogg_page, opus_head, vorbis_ident
-
-    flac = build_flac(sample_rate=22050, channels=1, bps=16, total=22050)
-    vorbis = (
-        ogg_page(7, 0, [vorbis_ident(2, 44100)], header_type=2)
-        + ogg_page(7, 88200, [b"\xaa" * 256], seq=1, header_type=4)
-    )
-    opus = (
-        ogg_page(9, 0, [opus_head(channels=1, pre_skip=312)], header_type=2)
-        + ogg_page(9, 96000 + 312, [b"\xbb" * 128], seq=1, header_type=4)
-    )
-    media = spark.createDataFrame(
-        [(1, "audio", bytearray(flac), "audio/flac"),
-         (2, "audio", bytearray(vorbis), "audio/ogg"),
-         (3, "audio", bytearray(opus), "audio/opus")],
-        "media_id long, kind string, payload binary, mime string",
-    )
-    rows = {r.media_id: r for r in decode_audio(media).collect()}
-    assert rows[1].ok == "headers"
-    assert (rows[1].sample_rate, rows[1].n_channels) == (22050, 1)
-    assert rows[1].n_samples == 22050
-    assert rows[1].features == [0.0] * N_FEATURES  # honest: no frame walk
-    assert rows[2].ok == "headers"
-    assert (rows[2].sample_rate, rows[2].n_channels) == (44100, 2)
-    assert rows[2].n_samples == 88200  # 2 s of 44.1 kHz
-    assert rows[3].ok == "headers"
-    assert rows[3].sample_rate == 48000 and rows[3].n_samples == 96000
-
-
-def test_decode_media_routes_ogg_theora(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-    from test_ogg_flac import ogg_page, theora_ident
-
-    payload = (
-        ogg_page(1, 0, [theora_ident(320, 176, 25, 1)], header_type=2)
-        + ogg_page(1, 10, [b"\xdd" * 99], seq=1)
-    )
-    media = spark.createDataFrame(
-        [(1, "video", bytearray(payload), "video/ogg")], MEDIA_SCHEMA
-    )
-    row = decode_media(media).collect()[0]
-    assert row.ok == "headers"
-    assert (row.width, row.height) == (320, 176)
-
-
-def _webp(kind, w, h, alpha=False):
-    import struct
-
-    if kind == "lossy":
-        body = b"\x00\x00\x00" + b"\x9d\x01\x2a" + struct.pack("<HH", w, h)
-        chunk = b"VP8 " + struct.pack("<I", len(body)) + body
-    elif kind == "lossless":
-        bits = (w - 1) | ((h - 1) << 14) | ((1 if alpha else 0) << 28)
-        body = b"\x2f" + struct.pack("<I", bits)
-        chunk = b"VP8L" + struct.pack("<I", len(body)) + body + b"\x00"
-    else:  # extended
-        body = (
-            bytes([0x10 if alpha else 0]) + b"\x00\x00\x00"
-            + (w - 1).to_bytes(3, "little") + (h - 1).to_bytes(3, "little")
-        )
-        chunk = b"VP8X" + struct.pack("<I", len(body)) + body
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-
-
-def test_parse_webp_header_all_variants():
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        parse_webp_header,
-    )
-
-    assert parse_webp_header(_webp("lossy", 320, 240)) == (320, 240, 3)
-    assert parse_webp_header(_webp("lossless", 64, 48)) == (64, 48, 3)
-    assert parse_webp_header(_webp("lossless", 64, 48, alpha=True)) == (64, 48, 4)
-    assert parse_webp_header(_webp("extended", 1920, 1080, alpha=True)) == (
-        1920, 1080, 4,
-    )
-    assert parse_webp_header(b"RIFF\x00\x00\x00\x00WAVE" + b"\x00" * 16) is None
-    assert parse_webp_header(b"\x89PNG\r\n\x1a\n" + b"\x00" * 24) is None
-    # non-keyframe VP8 (no start code): dims unavailable -> None
-    bad = bytearray(_webp("lossy", 10, 10))
-    bad[23] = 0x00
-    assert parse_webp_header(bytes(bad)) is None
-
-
-def test_decode_media_webp_header_fallback(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(_webp("lossy", 77, 55)), "image/webp")],
-        MEDIA_SCHEMA,
-    )
-    row = decode_media(media).collect()[0]
-    # header-derived real dims; pixels stay fake (needs VP8 decode)
-    assert (row.width, row.height, row.n_channels) == (77, 55, 3)
-
-
-def test_decode_media_avif_header_fallback(spark):
-    from security_log_analysis_rust_spark.textops.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
-    from test_mp4 import _avif
-
-    media = spark.createDataFrame(
-        [(1, "image", bytearray(_avif(240, 135, channels=4)), "image/avif")],
-        MEDIA_SCHEMA,
-    )
-    row = decode_media(media).collect()[0]
-    assert (row.width, row.height, row.n_channels) == (240, 135, 4)
 
 
 def test_training_corpus_fused_signals_match_joined_formulation(spark):
