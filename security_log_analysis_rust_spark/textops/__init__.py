@@ -22,7 +22,10 @@ training output (``shard``) + token-budget mixture waterfilling
 (``domains.plan_mixture``), distributed spherical k-means for trained
 SemDeDup/IVF centroids (``kmeans``), and HTML ->
 text extraction with a link-density boilerplate signal (``html``) —
-the entry stage for corpora arriving as raw markup. Every
+the entry stage for corpora arriving as raw markup. Standalone pure-Python
+media codec parsers (``jpeg``, ``gif`` pixel decoders; ``mp3``, ``adts``,
+``flac``, ``ogg`` audio and ``mp4``, ``webm`` video header walks) sit
+beside them with no Spark operator on top. Every
 operator carries a DuckDB oracle — via shared deterministic literals
 (seeded planes / md5-sampled centroids) or a generated SQL twin — checked
 with the driver's own comparator in tests; the exceptions (kmeans,

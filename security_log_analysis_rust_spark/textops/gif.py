@@ -1,14 +1,13 @@
 """GIF decoder (GIF87a/89a) — stdlib + numpy only.
 
-Third native web-image codec beside PNG (``multimodal.decode_png``) and
-baseline JPEG (``.jpeg``): block walk per the GIF spec, variable-width LZW
-decompression, palette mapping, interlace de-weave, first-frame transparency.
-:func:`decode_gif` returns the FIRST frame as an RGB array (animation
-frame-sampling belongs to the ``sample_frames`` plumbing, not the decoder).
+Web-image codec beside JPEG (``.jpeg``): block walk per the GIF spec,
+variable-width LZW decompression, palette mapping, interlace de-weave,
+first-frame transparency. :func:`decode_gif` returns the FIRST frame as an
+RGB array (animation frame-sampling is out of scope).
 
 Scope: any GIF87a/89a with a global or local color table; returns None for
-malformed streams. The LZW loop is per-code Python — same Arrow-batched
-thumbnail contract as the other decoders.
+malformed streams. The LZW loop is per-code Python, sized for
+thumbnail payloads like the JPEG decoder.
 """
 
 from __future__ import annotations

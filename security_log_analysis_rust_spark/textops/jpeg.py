@@ -1,11 +1,10 @@
 """Baseline-sequential JPEG decoder (ITU-T T.81) — stdlib + numpy only.
 
-Completes the multimodal decode story (reference keeps media opaque; a
-Common-Crawl-style table is mostly JPEG): :func:`decode_jpeg` turns a
-baseline JFIF payload into a uint8 pixel array, slotting in next to
-``decode_png`` in ``textops.multimodal.decode_media``.
+A standalone codec parser with no caller in the log pipeline (the
+reference keeps media opaque): :func:`decode_jpeg` turns a baseline or
+progressive JFIF payload into a uint8 pixel array.
 
-Scope (returns None outside it, routing the payload to the fallback):
+Scope (returns None outside it):
 
 * baseline sequential DCT, 8-bit precision (SOF0) — the overwhelmingly
   dominant web-JPEG profile;
@@ -20,8 +19,7 @@ Scope (returns None outside it, routing the payload to the fallback):
 
 Arithmetic coding, 12-bit, and hierarchical modes are out of scope by
 design. Entropy decoding is per-bit Python — acceptable in
-Arrow-batched workers on thumbnail payloads (same documented contract as
-the PNG path); the IDCT, dequantization, upsampling, and color transform
+thumbnail payloads; the IDCT, dequantization, upsampling, and color transform
 are vectorized numpy over whole component planes.
 """
 

@@ -1,6 +1,6 @@
 """MPEG audio (MP3) frame-header walk — metadata without PCM synthesis.
 
-Scope contract mirrors :func:`..multimodal.parse_jpeg_header`: this module
+Scope contract mirrors :func:`.jpeg.parse_jpeg_header`: this module
 parses the container/frame structure of an MPEG-1/2/2.5 Layer I/II/III
 stream (the public ISO/IEC 11172-3 / 13818-3 header layout) and reports
 sample rate, channel count, frame count, total samples, duration and the
@@ -9,8 +9,8 @@ synthesis is out of scope, so callers get honest header-derived features
 (duration, CBR/VBR profile) instead of fake PCM.
 
 Reference parity note: the reference engine has no audio path at all; this
-belongs to the training-data-pipeline extension (multimodal columns over
-web-crawl payloads, where MP3 dominates audio by volume).
+is a standalone parser for web-crawl payloads, where MP3 dominates audio by
+volume.
 """
 
 from __future__ import annotations

@@ -5,16 +5,15 @@ public ISO/IEC 14496-12 box layout (ftyp/moov/mvhd/trak/tkhd/mdia/mdhd/
 hdlr/stbl/stsd/stts/stsc/stsz/stco|co64) and reports container brand,
 movie duration, and per-track codec fourcc, dimensions, channel/sample
 counts and language. It additionally resolves the sample tables to
-per-sample (offset, size) byte ranges inside the payload, which lets
-:func:`..multimodal.sample_frames` fingerprint REAL video samples.
+per-sample (offset, size) byte ranges inside the payload, so a caller
+can address REAL video samples.
 It does NOT decode frames — H.264/AV1 entropy decode needs external
 codecs, so callers get honest header-derived features instead of fake
 pixels.
 
 Reference parity note: the reference engine has no video path at all
-(security_log_analysis_rust handles logs only); this belongs to the
-training-data-pipeline extension (multimodal columns over web-crawl
-payloads, where MP4 dominates video by volume).
+(security_log_analysis_rust handles logs only); this is a standalone
+parser for web-crawl payloads, where MP4 dominates video by volume.
 """
 
 from __future__ import annotations

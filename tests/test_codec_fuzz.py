@@ -1,8 +1,7 @@
 """Never-raise fuzz contract for every codec parser.
 
-All of these run inside Arrow-batched ``mapInPandas`` workers, where an
-uncaught exception kills the whole Spark stage — so the contract is:
-arbitrary bytes NEVER raise; they return None (or a well-formed result).
+The parsers take untrusted payload bytes, so the contract is: arbitrary
+bytes NEVER raise; they return None (or a well-formed result).
 Two corpora: pure random blobs, and valid payloads with random byte
 mutations (far better at reaching deep branches than noise alone).
 """
@@ -19,19 +18,12 @@ from security_log_analysis_rust_spark.textops.mp4 import (
     parse_avif_header,
     parse_mp4,
 )
-from security_log_analysis_rust_spark.textops.multimodal import (
-    decode_bmp,
-    decode_png,
-    decode_wav,
-    parse_webp_header,
-)
 from security_log_analysis_rust_spark.textops.ogg import parse_ogg
 from security_log_analysis_rust_spark.textops.webm import parse_webm
 
 PARSERS = [
     parse_adts, parse_flac, decode_gif, decode_jpeg, parse_mp3,
-    parse_avif_header, parse_mp4, decode_bmp, decode_png, decode_wav,
-    parse_webp_header, parse_ogg, parse_webm,
+    parse_avif_header, parse_mp4, parse_ogg, parse_webm,
 ]
 
 

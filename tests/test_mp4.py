@@ -1,7 +1,6 @@
 """ISO-BMFF parser round-trips against an independent forward encoder.
 
-No Spark needed — `parse_mp4` is a pure function; the Spark-side routing
-is covered in test_multimodal.py.
+No Spark needed — `parse_mp4` is a pure function.
 """
 
 import struct

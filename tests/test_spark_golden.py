@@ -122,7 +122,7 @@ def test_spark_journald_golden_single(spark):
     assert row.ex.username == "ark"
 
 
-def test_invalid_user_expr_all_null_column(spark):
+def test_udf_all_null_batch(spark):
     """An all-null message column extracts to all-null fields."""
     df = spark.createDataFrame([("noise",), ("more noise",)], "line string")
     out = df.select(

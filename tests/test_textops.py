@@ -1,4 +1,5 @@
-"""Tests for simhash, ANN, winnowing, connected components and the training corpus."""
+"""Tests for simhash, ANN, winnowing, connected components, the training corpus
+and the JPEG, GIF and MP3 codec parsers."""
 
 from __future__ import annotations
 
@@ -510,3 +511,210 @@ def test_training_corpus_fused_signals_match_joined_formulation(spark):
     a = sorted(map(tuple, joined.collect()))
     b = sorted(map(tuple, fused.collect()))
     assert a == b and len(a) > 0
+
+
+def test_jpeg_roundtrip_gray_and_color():
+    """Baseline JPEG decoder vs an independent forward encoder (Q=1):
+    solid blocks are bit-exact, arbitrary pixels within coefficient-
+    rounding tolerance; non-multiple-of-8 dims crop correctly."""
+    import numpy as np
+
+    from security_log_analysis_rust_spark.textops.jpeg import (
+        decode_jpeg,
+        parse_jpeg_header,
+    )
+    from util_jpeg import encode_color, encode_gray
+
+    solid = np.full((8, 8), 100, dtype=np.uint8)
+    dec = decode_jpeg(encode_gray(solid))
+    assert dec.shape == (8, 8, 1)
+    assert (dec[:, :, 0] == 100).all()  # DC-only block: exact
+
+    rng = np.random.default_rng(0)
+    img = rng.integers(0, 256, (13, 21), dtype=np.uint8)
+    payload = encode_gray(img)
+    assert parse_jpeg_header(payload) == (21, 13, 1)
+    d = decode_jpeg(payload)
+    assert d.shape == (13, 21, 1)
+    assert np.abs(d[:, :, 0].astype(int) - img.astype(int)).max() <= 1
+
+    rgb = rng.integers(0, 256, (10, 14, 3), dtype=np.uint8)
+    d3 = decode_jpeg(encode_color(rgb))
+    assert d3.shape == (10, 14, 3)
+    assert np.abs(d3.astype(int) - rgb.astype(int)).max() <= 2
+
+    # 4:2:0 subsampling: constant color survives the chroma downsample
+    flat = np.full((20, 24, 3), (30, 90, 200), dtype=np.uint8)
+    d4 = decode_jpeg(encode_color(flat, subsample=True))
+    assert d4.shape == (20, 24, 3)
+    assert np.abs(d4.astype(int) - flat.astype(int)).max() <= 1
+
+
+def test_jpeg_restart_markers_and_corrupt_inputs():
+    import numpy as np
+
+    from security_log_analysis_rust_spark.textops.jpeg import decode_jpeg
+    from util_jpeg import encode_gray
+
+    rng = np.random.default_rng(1)
+    img = rng.integers(0, 256, (16, 32), dtype=np.uint8)  # 8 MCUs
+    payload = encode_gray(img, restart_interval=3)
+    assert b"\xff\xd0" in payload  # RST0 actually emitted
+    d = decode_jpeg(payload)
+    assert d is not None
+    assert np.abs(d[:, :, 0].astype(int) - img.astype(int)).max() <= 1
+
+    assert decode_jpeg(b"\xff\xd8\xff\xd9") is None  # no frame
+    assert decode_jpeg(b"not a jpeg at all..") is None
+    assert decode_jpeg(payload[: len(payload) // 2]) is None  # truncated
+    # progressive (SOF2) declines pixel decode but header still parses
+    from security_log_analysis_rust_spark.textops.jpeg import parse_jpeg_header
+
+    prog = bytearray(payload)
+    sof = prog.find(b"\xff\xc0")
+    prog[sof + 1] = 0xC2
+    assert decode_jpeg(bytes(prog)) is None
+    assert parse_jpeg_header(bytes(prog)) == (32, 16, 1)
+
+
+def test_gif_roundtrip_paths():
+    """GIF decoder vs an independent test encoder: plain, interlaced,
+    transparent, 2-color, and REAL LZW (dictionary growth, width bumps,
+    4096-entry table-full freeze) all reproduce exact pixels."""
+    import numpy as np
+
+    from security_log_analysis_rust_spark.textops.gif import (
+        decode_gif,
+        parse_gif_header,
+    )
+    from util_gif import encode_gif
+
+    rng = np.random.default_rng(0)
+    pal = rng.integers(0, 256, (16, 3), dtype=np.uint8)
+    idx = rng.integers(0, 16, (13, 21), dtype=np.uint8)
+    g = encode_gif(idx, pal)
+    assert parse_gif_header(g) == (21, 13, 3)
+    assert (decode_gif(g) == pal[idx]).all()
+    assert (decode_gif(encode_gif(idx, pal, interlace=True)) == pal[idx]).all()
+    # transparency: transparent pixels take the background palette entry
+    got = decode_gif(encode_gif(idx, pal, transparent=5))
+    assert (got == pal[np.where(idx == 5, 0, idx)]).all()
+    # real LZW incl. the 4096-code table-full freeze (256x256 tiled)
+    big = np.tile(rng.integers(0, 4, (16, 16), dtype=np.uint8), (16, 16))
+    assert (decode_gif(encode_gif(big, pal[:4], compress=True)) == pal[:4][big]).all()
+    noise = rng.integers(0, 16, (64, 64), dtype=np.uint8)
+    assert (decode_gif(encode_gif(noise, pal, compress=True)) == pal[noise]).all()
+    assert decode_gif(b"GIF89a" + b"\x00" * 20) is None
+    assert decode_gif(b"not a gif") is None
+
+
+def test_jpeg_gif_property_roundtrip():
+    """Property check (hypothesis): arbitrary small images survive the
+    encode->decode round trip — JPEG within coefficient-rounding tolerance,
+    GIF exactly."""
+    import numpy as np
+    from hypothesis import given, settings, strategies as st
+
+    from security_log_analysis_rust_spark.textops.gif import decode_gif
+    from security_log_analysis_rust_spark.textops.jpeg import decode_jpeg
+    from util_gif import encode_gif
+    from util_jpeg import encode_gray
+
+    @settings(max_examples=20, deadline=None)
+    @given(
+        st.integers(1, 40), st.integers(1, 40), st.integers(0, 2**32 - 1),
+        st.booleans(),
+    )
+    def check(h, w, seed, interlace):
+        rng = np.random.default_rng(seed)
+        gray = rng.integers(0, 256, (h, w), dtype=np.uint8)
+        d = decode_jpeg(encode_gray(gray))
+        assert d is not None and d.shape == (h, w, 1)
+        assert np.abs(d[:, :, 0].astype(int) - gray.astype(int)).max() <= 1
+
+        pal = rng.integers(0, 256, (8, 3), dtype=np.uint8)
+        idx = rng.integers(0, 8, (h, w), dtype=np.uint8)
+        g = decode_gif(encode_gif(idx, pal, interlace=interlace, compress=True))
+        assert g is not None and (g == pal[idx]).all()
+
+    check()
+
+
+_MP3_SR_IDX = {3: {44100: 0, 48000: 1, 32000: 2},
+               2: {22050: 0, 24000: 1, 16000: 2},
+               0: {11025: 0, 12000: 1, 8000: 2}}
+
+
+def _mp3_frame(kbps, sr=44100, version_bits=3, layer=3, padding=0, mono=False):
+    """One spec-shaped MPEG audio frame: valid 4-byte header + zero fill to
+    the computed frame length (content bytes are irrelevant to the walk)."""
+    from security_log_analysis_rust_spark.textops.mp3 import _BITRATES
+
+    vgroup = 0 if version_bits == 3 else 1
+    br_idx = _BITRATES[(vgroup, layer)].index(kbps)
+    b1 = 0xE0 | (version_bits << 3) | ((4 - layer) << 1) | 1
+    b2 = (br_idx << 4) | (_MP3_SR_IDX[version_bits][sr] << 2) | (padding << 1)
+    b3 = (3 << 6) if mono else 0
+    if layer == 1:
+        spf, flen = 384, (12 * kbps * 1000 // sr + padding) * 4
+    else:
+        spf = 1152 if (layer == 2 or vgroup == 0) else 576
+        flen = spf // 8 * kbps * 1000 // sr + padding
+    return bytes([0xFF, b1, b2, b3]) + b"\x00" * (flen - 4), spf
+
+
+def test_mp3_header_walk_cbr():
+    from security_log_analysis_rust_spark.textops.mp3 import parse_mp3
+
+    frame, spf = _mp3_frame(128)
+    # ID3v2 prefix (syncsafe size) + 10 frames + ID3v1 trailer
+    id3_body = b"\x00" * 300
+    id3 = b"ID3\x04\x00\x00" + bytes([0, 0, 300 >> 7, 300 & 0x7F]) + id3_body
+    payload = id3 + frame * 10 + b"TAG" + b"\x00" * 125
+    info = parse_mp3(payload)
+    assert info is not None
+    assert (info.version, info.layer) == ("MPEG1", 3)
+    assert (info.sample_rate, info.n_channels) == (44100, 2)
+    assert info.n_frames == 10 and info.n_samples == 10 * spf
+    assert abs(info.duration_s - 10 * spf / 44100) < 1e-9
+    assert not info.vbr
+    # frame-length-weighted mean bitrate is within a slot of nominal
+    assert abs(info.bitrate_kbps - 128) < 2
+    # truncated final frame is dropped, walked prefix kept
+    assert parse_mp3(frame * 3 + frame[:50]).n_frames == 3
+
+
+def test_mp3_vbr_padding_and_mpeg2():
+    from security_log_analysis_rust_spark.textops.mp3 import parse_mp3
+
+    f128, _ = _mp3_frame(128)
+    f192p, _ = _mp3_frame(192, padding=1)
+    info = parse_mp3(f128 + f192p + f128 + f192p)
+    assert info is not None and info.vbr
+    assert info.frame_bitrates == [128, 192, 128, 192]
+    # MPEG-2 Layer III: 576 samples/frame, mono, 22050 Hz
+    f2, spf2 = _mp3_frame(64, sr=22050, version_bits=2, mono=True)
+    assert spf2 == 576
+    info2 = parse_mp3(f2 * 5)
+    assert (info2.version, info2.sample_rate, info2.n_channels) == ("MPEG2", 22050, 1)
+    assert info2.n_samples == 5 * 576
+    # Layer II MPEG-1: 1152 samples/frame
+    fl2, spfl2 = _mp3_frame(192, layer=2)
+    assert spfl2 == 1152 and parse_mp3(fl2 * 2).layer == 2
+
+
+def test_mp3_rejects_non_mp3():
+    import numpy as np
+
+    from security_log_analysis_rust_spark.textops.mp3 import parse_mp3
+
+    rng = np.random.default_rng(7)
+    assert parse_mp3(bytes(rng.integers(0, 255, 4096, dtype=np.uint8))) is None
+    frame, _ = _mp3_frame(128)
+    assert parse_mp3(frame) is None  # single frame: below _MIN_FRAMES
+    assert parse_mp3(b"") is None
+    # false-positive sync whose next "frame" disagrees on version/rate
+    other, _ = _mp3_frame(64, sr=22050, version_bits=2)
+    assert parse_mp3(frame + other) is None
+    # junk before the first sync word is scanned past
+    assert parse_mp3(b"\x01\x02\x03junkjunk" + frame * 2) is not None
