@@ -137,6 +137,7 @@ def _dispatch(spark, args) -> int:
     if args.cmd == "db":
         import os
 
+        from .pipeline.dims import read_dims
         from .pipeline.enrich import enrich_events
         from .pipeline.export import export_monthly
         from .pipeline.route import read_sink
@@ -145,8 +146,7 @@ def _dispatch(spark, args) -> int:
         intr = read_sink(
             spark, os.path.join(args.sink, "intrusion_log"), INTRUSION_LOG_SCHEMA
         )
-        hc = spark.read.parquet(os.path.join(args.dims, "host_country.parquet"))
-        cc = spark.read.parquet(os.path.join(args.dims, "country_code.parquet"))
+        hc, cc = read_dims(spark, args.dims)
         enriched = enrich_events(intr, hc, cc).select(
             "service", "server", "datetime", "host", "username", "code", "country"
         )
@@ -172,12 +172,12 @@ def _dispatch(spark, args) -> int:
         import os
 
         from .sources.logfiles import export_json
+        from .pipeline.dims import read_dim
         from .pipeline.route import read_sink
-        from .schemas import HOST_COUNTRY_SCHEMA, INTRUSION_LOG_SCHEMA
+        from .schemas import INTRUSION_LOG_SCHEMA
 
         if args.table == "host_country":
-            df = spark.read.parquet(os.path.join(args.sink, "host_country.parquet"))
-            df = df.select(*[f.name for f in HOST_COUNTRY_SCHEMA.fields])
+            df = read_dim(spark, args.sink, "host_country")
         else:
             df = read_sink(
                 spark, os.path.join(args.sink, "intrusion_log"), INTRUSION_LOG_SCHEMA
@@ -196,12 +196,12 @@ def _dispatch(spark, args) -> int:
         from .sources.logfiles import import_json
 
         if args.table == "host_country":
-            from .pipeline.dims import overwrite_dim, upsert_host_country
+            from .pipeline.dims import overwrite_dim, read_dim, upsert_host_country
             from .schemas import HOST_COUNTRY_SCHEMA
 
             dim_path = os.path.join(args.sink, "host_country.parquet")
             updates = spark.read.schema(HOST_COUNTRY_SCHEMA).json(args.path)
-            existing = spark.read.parquet(dim_path)
+            existing = read_dim(spark, args.sink, "host_country")
             merged = upsert_host_country(existing, updates).persist()
             n_new = merged.count() - existing.count()
             overwrite_dim(merged, dim_path)
@@ -220,6 +220,7 @@ def _dispatch(spark, args) -> int:
         import os
 
         from .pipeline.aggregate import per_country_counts
+        from .pipeline.dims import read_dims
         from .pipeline.enrich import enrich_events
         from .pipeline.export import country_report_html
         from .pipeline.route import read_sink
@@ -228,8 +229,7 @@ def _dispatch(spark, args) -> int:
         intr = read_sink(
             spark, os.path.join(args.sink, "intrusion_log"), INTRUSION_LOG_SCHEMA
         )
-        hc = spark.read.parquet(os.path.join(args.dims, "host_country.parquet"))
-        cc = spark.read.parquet(os.path.join(args.dims, "country_code.parquet"))
+        hc, cc = read_dims(spark, args.dims)
         pc = per_country_counts(enrich_events(intr, hc, cc, how="inner"))
         if args.html:
             country_report_html(pc, args.html)

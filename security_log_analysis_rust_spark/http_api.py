@@ -20,6 +20,17 @@ Routes (reference ``get_path``, security_log_http.rs:589-605):
 * ``GET /security_log/cleanup`` — resolve dangling hosts through the
   configured resolver and upsert the dim (``host_country_cleanup``,
   ``:440-461``).
+
+Fixed Spark job costs, not data, set these requests' latency, so each read
+runs as few jobs as it can:
+
+* the sinks and dims are read with their declared schemas
+  (``route.read_sink``, ``route.read_systemd_sink``, ``dims.read_dims``), so
+  no read starts Spark's parquet schema-inference job;
+* a paginated request (intrusion rows, log messages, host countries) is one
+  action: its total is an ``Observation`` on the filtered rows under the
+  page query (``aggregate.observed_page``), not a second ``count()``. A
+  negative ``offset`` or ``limit`` is an error before any job runs.
 """
 
 from __future__ import annotations
@@ -156,21 +167,17 @@ class SecurityLogApp:
         )
 
     def _dims(self):
-        hc = self.spark.read.parquet(
-            os.path.join(self.dims_dir, "host_country.parquet")
-        )
-        cc = self.spark.read.parquet(
-            os.path.join(self.dims_dir, "country_code.parquet")
-        )
-        return hc, cc
+        from .pipeline.dims import read_dims
+
+        return read_dims(self.spark, self.dims_dir)
 
     def _systemd_path(self) -> str:
         return os.path.join(self.sink_dir, "systemd_log_messages")
 
     def _systemd(self):
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self._systemd_path()
-        )
+        from .pipeline.route import read_systemd_sink
+
+        return read_systemd_sink(self.spark, self._systemd_path())
 
     def country_count(
         self,
@@ -254,20 +261,12 @@ class SecurityLogApp:
     ) -> dict:
         """intursion_log_get (security_log_http.rs:240-283): filtered +
         paginated intrusion rows with a total."""
-        from .pipeline.aggregate import paginate
+        from .pipeline.aggregate import observed_page
         from .pipeline.dims import build_event_filters
 
         df = build_event_filters(self._intrusions(), service=service, server=server)
-        total = df.count()
-        data = []
-        for r in paginate(df, offset=offset, limit=limit).collect():
-            d = r.asDict()
-            d["datetime"] = d["datetime"].isoformat()
-            data.append(d)
-        return {
-            "pagination": {"total": total, "offset": offset, "limit": limit},
-            "data": data,
-        }
+        page = observed_page(df, offset, limit)
+        return _page_body(page, offset, limit, ("datetime",))
 
     def intrusion_log_post(self, updates: list) -> int:
         """intrusion_log_post (security_log_http.rs:313-328): dedup-insert a
@@ -301,18 +300,11 @@ class SecurityLogApp:
 
     def host_country_get(self, offset: int = 0, limit: int = 10) -> dict:
         """host_country_get (security_log_http.rs:404-438)."""
+        from .pipeline.aggregate import observed_page
+
         hc, _ = self._dims()
-        total = hc.count()
-        data = []
-        for r in hc.orderBy("host").offset(offset).limit(limit).collect():
-            d = r.asDict()
-            if d.get("created_at") is not None:
-                d["created_at"] = d["created_at"].isoformat()
-            data.append(d)
-        return {
-            "pagination": {"total": total, "offset": offset, "limit": limit},
-            "data": data,
-        }
+        page = observed_page(hc, offset, limit, order=["host"])
+        return _page_body(page, offset, limit, ("created_at",))
 
     def host_country_post(self, entries: list) -> int:
         """host_country_post (security_log_http.rs:410-428 post): per-row
@@ -346,6 +338,8 @@ class SecurityLogApp:
     ) -> dict:
         """get_log_messages (security_log_http.rs:520-565): filtered,
         paginated, with a total for the Pagination header."""
+        from .pipeline.aggregate import observed_page
+
         df = self._systemd()
         if log_level is not None:
             df = df.filter(F.col("log_level") == log_level)
@@ -355,24 +349,8 @@ class SecurityLogApp:
             df = df.filter(F.col("log_timestamp") >= F.lit(min_date))
         if max_date is not None:
             df = df.filter(F.col("log_timestamp") <= F.lit(max_date))
-        total = df.count()
-        rows = (
-            df.orderBy("log_timestamp", "id")
-            .offset(offset)
-            .limit(limit)
-            .collect()
-        )
-        data = []
-        for r in rows:
-            d = r.asDict()
-            for c in ("log_timestamp", "processed_time"):
-                if d.get(c) is not None:
-                    d[c] = d[c].isoformat()
-            data.append(d)
-        return {
-            "pagination": {"total": total, "offset": offset, "limit": limit},
-            "data": data,
-        }
+        page = observed_page(df, offset, limit, order=["log_timestamp", "id"])
+        return _page_body(page, offset, limit, ("log_timestamp", "processed_time"))
 
     def delete_log_message(self, msg_id: str) -> int:
         """SystemdLogMessages::delete analog (security_log_http.rs:567-586),
@@ -384,6 +362,8 @@ class SecurityLogApp:
         sink (one row deleted = one file rewritten, not one sink)."""
         import glob
         from urllib.parse import unquote, urlparse
+
+        from .pipeline.route import read_systemd_sink
 
         # sweep temp dirs stranded by a crash mid-swap in an earlier call:
         # they are invisible to Spark (dot prefix) but would collide with
@@ -406,7 +386,7 @@ class SecurityLogApp:
             # input_file_name() returns a percent-encoded file: URI — paths
             # with spaces/UTF-8 must be unquoted or os.replace misses
             fpath = unquote(urlparse(uri).path) if uri.startswith("file:") else uri
-            one = self.spark.read.parquet(fpath)
+            one = read_systemd_sink(self.spark, fpath)
             keep = one.filter(F.col("id") != msg_id).persist()
             kept = keep.count()
             n += one.count() - kept
@@ -457,6 +437,23 @@ class SecurityLogApp:
             if d.get("created_at") is not None:
                 d["created_at"] = d["created_at"].isoformat()
         return new_rows
+
+
+def _page_body(page, offset: int, limit: int, ts_cols) -> dict:
+    """The JSON body of a paginated route: ``page`` is ``(total, rows)``
+    from ``aggregate.observed_page``; ``ts_cols`` are rendered ISO-8601."""
+    total, rows = page
+    data = []
+    for r in rows:
+        d = r.asDict()
+        for c in ts_cols:
+            if d.get(c) is not None:
+                d[c] = d[c].isoformat()
+        data.append(d)
+    return {
+        "pagination": {"total": total, "offset": offset, "limit": limit},
+        "data": data,
+    }
 
 
 def _qp(qs: dict, name: str) -> Optional[str]:

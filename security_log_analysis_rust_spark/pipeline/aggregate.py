@@ -11,9 +11,9 @@ general case.
 from __future__ import annotations
 
 from datetime import date, datetime, timedelta, timezone
-from typing import Optional
+from typing import List, Optional, Sequence, Tuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
 
@@ -28,6 +28,10 @@ def per_country_counts(
 
     ``ndays`` filters ``datetime >= date(as_of) - ndays`` (the reference uses
     ``now()``; an explicit ``as_of`` keeps results deterministic).
+
+    The result holds at most one row per ``country_code`` row, so it is
+    sorted in one partition: a global ``orderBy`` would add a range
+    exchange and its sampling job for a few hundred rows.
     """
     df = enriched
     if service is not None:
@@ -42,7 +46,8 @@ def per_country_counts(
     return (
         df.groupBy("country")
         .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), F.asc("country"))
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("count"), F.asc("country"))
     )
 
 
@@ -135,17 +140,49 @@ def top_k_countries(enriched: DataFrame, k: int = 10, **kw) -> DataFrame:
 
 
 def paginate(
-    df: DataFrame, offset: int = 0, limit: int = 20
+    df: DataFrame,
+    offset: int = 0,
+    limit: int = 20,
+    order: Optional[Sequence] = None,
 ) -> DataFrame:
-    """O1 (``src/models.rs:350-366``): ORDER BY datetime DESC + OFFSET/LIMIT.
+    """O1 (``src/models.rs:350-366``): ORDER BY ``order`` + OFFSET/LIMIT.
 
-    Ties on datetime are broken by the full key so pages are deterministic
-    (the reference's ordering is only as stable as Postgres makes it).
+    The default order is datetime DESC with ties broken by the full key, so
+    intrusion pages are deterministic (the reference's ordering is only as
+    stable as Postgres makes it).
     """
-    ordered = df.orderBy(
-        F.desc("datetime"), F.asc("host"), F.asc("service"), F.asc("server")
-    )
-    return ordered.offset(offset).limit(limit)
+    if order is None:
+        order = [F.desc("datetime"), F.asc("host"), F.asc("service"), F.asc("server")]
+    return df.orderBy(*order).offset(offset).limit(limit)
+
+
+def observed_page(
+    df: DataFrame,
+    offset: int = 0,
+    limit: int = 20,
+    order: Optional[Sequence] = None,
+) -> Tuple[int, List[Row]]:
+    """``(total, rows)``: the row count of ``df`` and its :func:`paginate`
+    page, from one action.
+
+    The total is an ``Observation`` on ``df`` below the ordered
+    offset/limit, so the scan that feeds the page also counts the rows it
+    lets through; there is no second ``count()`` query. A page of
+    ``limit=0`` is not run: Catalyst replaces that query, observer
+    included, with an empty relation, so its total is counted instead.
+    A negative ``offset`` or ``limit`` raises ``ValueError`` before any job.
+    """
+    if offset < 0 or limit < 0:
+        raise ValueError(
+            f"offset and limit must be >= 0 (got offset={offset}, limit={limit})"
+        )
+    if limit == 0:
+        return df.count(), []
+    seen = Observation()
+    rows = paginate(
+        df.observe(seen, F.count(F.lit(1)).alias("n")), offset, limit, order
+    ).collect()
+    return seen.get["n"], rows
 
 
 def salted_count(

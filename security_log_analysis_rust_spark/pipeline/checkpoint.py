@@ -34,12 +34,14 @@ from typing import List, Optional
 from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import INTRUSION_LOG_SCHEMA
 from .parse import extract_events
 from .route import (
     UNIQUE_KEY,
     append_dedup,
     dedup_intrusions,
     read_sink,
+    read_systemd_sink,
     to_intrusion_log,
     to_systemd_log_messages,
 )
@@ -112,7 +114,7 @@ def _sink_watermarks(spark: SparkSession, intr_path: str) -> dict:
     recording — a sink built by this module folds from manifests instead."""
     out: dict = {}
     for r in (
-        spark.read.parquet(intr_path)
+        read_sink(spark, intr_path, INTRUSION_LOG_SCHEMA)
         .groupBy("service", "server")
         .agg(F.max("datetime").alias("mx"))
         .collect()
@@ -271,16 +273,12 @@ def run_incremental(
 
 
 def read_sinks(spark: SparkSession, sink_dir: str):
-    from ..schemas import INTRUSION_LOG_SCHEMA
-
     intr = read_sink(
         spark, os.path.join(sink_dir, "intrusion_log"), INTRUSION_LOG_SCHEMA
     )
-    sysd_glob = os.path.join(sink_dir, "systemd_log_messages")
+    sysd_path = os.path.join(sink_dir, "systemd_log_messages")
     sysd = (
-        spark.read.option("recursiveFileLookup", "true").parquet(sysd_glob)
-        if os.path.exists(sysd_glob)
-        else None
+        read_systemd_sink(spark, sysd_path) if os.path.exists(sysd_path) else None
     )
     return intr, sysd
 

@@ -15,17 +15,36 @@
 
 from __future__ import annotations
 
-from typing import Callable, Optional
+import os
+from typing import Callable, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..schemas import COUNTRY_CODE_SCHEMA, HOST_COUNTRY_SCHEMA
+
+_DIM_SCHEMAS = {"host_country": HOST_COUNTRY_SCHEMA, "country_code": COUNTRY_CODE_SCHEMA}
+
+
+def read_dim(spark: SparkSession, dims_dir: str, name: str) -> DataFrame:
+    """Dim ``name`` (``host_country`` or ``country_code``) from
+    ``<dims_dir>/<name>.parquet``, read with its declared schema, so the
+    read runs no schema-inference job."""
+    return spark.read.schema(_DIM_SCHEMAS[name]).parquet(
+        os.path.join(dims_dir, f"{name}.parquet")
+    )
+
+
+def read_dims(spark: SparkSession, dims_dir: str) -> Tuple[DataFrame, DataFrame]:
+    """``(host_country, country_code)`` by :func:`read_dim`."""
+    hc = read_dim(spark, dims_dir, "host_country")
+    return hc, read_dim(spark, dims_dir, "country_code")
 
 
 def overwrite_dim(df: DataFrame, path: str) -> None:
     """Atomically replace a dim table at ``path`` (file OR directory) with
     ``df``: write to a sibling tmp dir first (the source may be ``path``
     itself), then swap. The Iceberg table-commit analog for plain parquet."""
-    import os
     import shutil
 
     tmp = path + ".tmp"

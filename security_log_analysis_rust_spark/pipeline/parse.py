@@ -292,9 +292,8 @@ def extract_events(
     is_ssh = is_ssh_auth(line)
     blacklist = is_filtered(line, filters)
 
-    rec = F.from_json(F.when(is_j, line), JOURNALD_SCHEMA)
+    rec = F.col("rec")
     jts = F.timestamp_micros(rec["__REALTIME_TIMESTAMP"].try_cast("long"))
-    j_valid = is_j & ~blacklist & jts.isNotNull()
     has_invalid_user = line.contains("Invalid user ")
 
     nginx_ok = (
@@ -308,13 +307,16 @@ def extract_events(
     # Stage 1: every per-line derivation is materialized as a COLUMN, the
     # kind routing references only those attributes, and unrouted lines drop
     # at an explode_barrier, which evaluates each derivation once per line.
+    # The journald record is one column read by three fields, so Catalyst
+    # keeps one from_json instead of one pruned copy per field.
     parsed0 = (
         pages_to_lines(pages)
-        .withColumn("j_valid", j_valid)
+        .withColumn("rec", F.from_json(F.when(is_j, line), JOURNALD_SCHEMA))
+        .withColumns(
+            {"msg": rec["MESSAGE"], "unit": rec["UNIT"], "jts": jts}
+        )
+        .withColumn("j_valid", is_j & ~blacklist & F.col("jts").isNotNull())
         .withColumn("has_iu", has_invalid_user)
-        .withColumn("msg", rec["MESSAGE"])
-        .withColumn("unit", rec["UNIT"])
-        .withColumn("jts", jts)
         .withColumn("toks", tokens_expr(line))
         .withColumn("apache_host", trunc_bytes_expr(F.get("toks", 0), HOST_BYTES))
         # timestamp parsing is the parse stage's heaviest per-line work
@@ -351,7 +353,12 @@ def extract_events(
             .when(F.col("ssh_ts").isNotNull(), "ssh")
             .when(F.col("apache_ts").isNotNull(), "apache"),
         )
-        .withColumn("__line_keep", explode_barrier(F.col("kind").isNotNull()))
+        # the routing key is the barrier's generated column: the sinks'
+        # filters on it stay above the barrier instead of re-deriving the
+        # whole routing from ``line`` below it
+        .withColumn(
+            "kind", explode_barrier(F.col("kind").isNotNull(), F.col("kind"))
+        )
     )
 
     # Stage 2: ONE extraction expression serves both ssh paths; rows whose

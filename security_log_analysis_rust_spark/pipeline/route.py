@@ -25,6 +25,10 @@ per month (``src/polars_analysis.rs:145-146``). ``compact_intrusion_log``
 rewrites each month directory holding several files (one per append) back
 into that layout.
 
+Every read of either sink declares its schema from ``schemas.py``
+(:func:`_read_stored`, :func:`read_systemd_sink`), so no read starts
+Spark's parquet schema-inference job.
+
 Scale: the dedup shuffles once on the unique key — the same shuffle a
 ``groupBy`` would need; AQE handles skewed hosts. The anti-join reads only
 the sink's key columns (column pruning) and can be restricted to the
@@ -40,6 +44,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import INTRUSION_LOG_SCHEMA, SYSTEMD_LOG_MESSAGES_SCHEMA
 
@@ -104,6 +109,7 @@ def read_sink(
 ) -> DataFrame:
     """Read a parquet sink table projected to ``schema``'s columns (drops the
     physical partition column); empty DataFrame if it doesn't exist yet.
+    The read declares ``schema`` (:func:`_read_stored`).
 
     ``since`` (ISO date or timestamp) keeps only ``datetime >= since`` via
     :func:`sink_month_filter`, applied before the projection drops
@@ -116,7 +122,7 @@ def read_sink(
     recover_sink(path)
     if not os.path.exists(path):
         return spark.createDataFrame([], schema)
-    df = spark.read.parquet(path)
+    df = _read_stored(spark, path, schema)
     if since is not None:
         df = sink_month_filter(df, since)
     return df.select(*[f.name for f in schema.fields])
@@ -124,6 +130,32 @@ def read_sink(
 
 #: intrusion sink partition column: month(datetime), written as 'yyyy-MM'
 MONTH_COL = "dt_month"
+
+
+def _read_stored(
+    spark: SparkSession, path: str, schema=INTRUSION_LOG_SCHEMA
+) -> DataFrame:
+    """The sink at ``path`` as stored, read with the declared ``schema``
+    plus :data:`MONTH_COL` as a string partition column when ``path`` has
+    month directories (a legacy flat sink has none).
+
+    Declaring the schema skips Spark's parquet schema inference, a job that
+    reads file footers on every ``spark.read.parquet``. Spark still types
+    each column by the file, so this holds only while every writer writes
+    the declared schema (``tests/test_sink_layout.py`` checks each one)."""
+    if glob.glob(os.path.join(path, f"{MONTH_COL}=*")):
+        schema = StructType([*schema.fields, StructField(MONTH_COL, StringType())])
+    return spark.read.schema(schema).parquet(path)
+
+
+def read_systemd_sink(spark: SparkSession, path: str) -> DataFrame:
+    """The systemd sink (one ``split=<id>`` directory per ingest split, or
+    one part-file) read with its declared schema; no partition column."""
+    return (
+        spark.read.schema(SYSTEMD_LOG_MESSAGES_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(path)
+    )
 
 
 def sink_month_filter(df: DataFrame, since: str) -> DataFrame:
@@ -254,12 +286,16 @@ def _migrate_unpartitioned_sink(spark: SparkSession, sink_path: str) -> bool:
     ]
     if not root_files:
         return False
-    flat = spark.read.parquet(*root_files)
+    flat = spark.read.schema(INTRUSION_LOG_SCHEMA).parquet(*root_files)
     flat = flat.withColumn(MONTH_COL, F.date_format("datetime", "yyyy-MM"))
     month_dirs = sorted(glob.glob(os.path.join(sink_path, f"{MONTH_COL}=*")))
     if month_dirs:  # already-mixed sink: keep both halves
-        part = spark.read.option("basePath", sink_path).parquet(*month_dirs)
-        flat = flat.unionByName(part.select(*flat.columns))
+        part = (
+            spark.read.schema(flat.schema)
+            .option("basePath", sink_path)
+            .parquet(*month_dirs)
+        )
+        flat = flat.unionByName(part)
     tmp = sink_path + ".tmp"
     _write_months(flat, tmp, "overwrite")
     _swap_dir(sink_path, tmp)
@@ -294,9 +330,7 @@ def append_dedup(
     existed = os.path.exists(sink_path)
     if existed:
         _migrate_unpartitioned_sink(spark, sink_path)
-        existing = spark.read.parquet(sink_path)
-        if since is not None:
-            existing = sink_month_filter(existing, since)
+        existing = read_sink(spark, sink_path, INTRUSION_LOG_SCHEMA, since=since)
         new_rows = new_rows.join(existing.select(*key), key, "left_anti")
     n = _write_months(
         new_rows.withColumn(MONTH_COL, F.date_format("datetime", "yyyy-MM")),
@@ -324,10 +358,8 @@ def cleanup_intrusion_log(spark: SparkSession, sink_path: str) -> int:
     months rewrites a few months, not 100 TB.
     """
     recover_sink(sink_path)
-    df = spark.read.parquet(sink_path)
-    if MONTH_COL not in df.columns:  # legacy flat sink: migrate, then scope
-        if _migrate_unpartitioned_sink(spark, sink_path):
-            df = spark.read.parquet(sink_path)
+    _migrate_unpartitioned_sink(spark, sink_path)  # legacy flat sink
+    df = _read_stored(spark, sink_path)
 
     dup_months = (
         df.groupBy(*UNIQUE_KEY)
@@ -372,7 +404,7 @@ def compact_intrusion_log(spark: SparkSession, sink_path: str) -> int:
     ]
     if not months:
         return 0
-    df = spark.read.parquet(sink_path)
+    df = _read_stored(spark, sink_path)
     for month in months:
         _rewrite_month(sink_path, month, df.filter(F.col(MONTH_COL) == month))
     spark.catalog.refreshByPath(sink_path)

@@ -36,7 +36,6 @@ def write_dims(out_dir: str, seed: int = 42) -> dict:
 
     pool = host_pool(seed)
     hosts = sorted(pool["host_country"])
-    created = datetime(2024, 1, 1)  # naive UTC, matches Spark TimestampType
     pq.write_table(
         pa.table(
             {
@@ -47,7 +46,12 @@ def write_dims(out_dir: str, seed: int = 42) -> dict:
                 "ipaddr": [
                     h if h.replace(".", "").isdigit() else None for h in hosts
                 ],
-                "created_at": [created] * len(hosts),
+                # UTC-adjusted, so Spark types it TimestampType as
+                # HOST_COUNTRY_SCHEMA declares (a naive value would read
+                # back as TimestampNTZType)
+                "created_at": pa.array(
+                    [_CREATED_AT] * len(hosts), pa.timestamp("us", tz="UTC")
+                ),
             }
         ),
         hc_path,

@@ -32,10 +32,13 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     return df
 
 
-def explode_barrier(keep: Optional[Column] = None) -> Column:
+def explode_barrier(
+    keep: Optional[Column] = None, value: Optional[Column] = None
+) -> Column:
     """Generator that pins the columns projected beside it: ``explode`` of a
     one-element array (``keep`` is None) keeps every row; with ``keep`` the
-    array is empty where ``keep`` is not true, so those rows drop.
+    array is null where ``keep`` is not true, so those rows drop. The
+    generated column is ``value`` (default 1).
 
     Why: Catalyst inlines a projected expression into every consumer
     (CollapseProject) and pushes a ``filter`` down through projections with
@@ -50,9 +53,8 @@ def explode_barrier(keep: Optional[Column] = None) -> Column:
     column projected beside the barrier is evaluated once per row, and a
     row drop made inside the generator is no Filter to push. A ``filter``
     placed above the barrier on non-generated columns can still be pushed
-    below it.
+    below it; one on the generated ``value`` cannot, so a value that later
+    filters read (a routing key) is derived once, inside the barrier.
     """
-    one = F.array(F.lit(1))
-    if keep is None:
-        return F.explode(one)
-    return F.explode(F.when(keep, one).otherwise(F.array().cast("array<int>")))
+    one = F.array(F.lit(1) if value is None else value)
+    return F.explode(one if keep is None else F.when(keep, one))

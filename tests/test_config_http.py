@@ -315,6 +315,53 @@ def test_malformed_query_param_returns_http_error(served_app):
     assert "error" in body
 
 
+def test_pages_at_the_edges(served_app, spark):
+    """Each paginated route is one action whose total is observed on the
+    page query; the total must hold where the page is empty: no match, an
+    offset past the end, and ``limit=0`` (whose query never runs)."""
+    from pyspark.sql import functions as F
+
+    from security_log_analysis_rust_spark.pipeline.dims import build_event_filters
+
+    app, _ = served_app
+    ssh = build_event_filters(app._intrusions(), service="ssh").count()
+    errors = app._systemd().filter(F.col("log_level") == "error").count()
+    hosts = app._dims()[0].count()
+    assert ssh and errors and hosts
+    for call, n in [
+        (lambda **kw: app.intrusion_log_get(service="ssh", **kw), ssh),
+        (lambda **kw: app.log_messages(log_level="error", **kw), errors),
+        (app.host_country_get, hosts),
+    ]:
+        for offset, limit, rows in [(0, 3, 3), (n + 5, 10, 0), (0, 0, 0), (n - 1, 10, 1)]:
+            out = call(offset=offset, limit=limit)
+            assert out["pagination"] == {"total": n, "offset": offset, "limit": limit}
+            assert len(out["data"]) == rows
+    empty = {"pagination": {"total": 0, "offset": 0, "limit": 10}, "data": []}
+    assert app.intrusion_log_get(service="no-such-service") == empty
+    assert app.log_messages(log_unit="no-such.service") == empty
+
+
+def test_pages_of_a_missing_sink_are_empty(spark, tmp_path):
+    """Before the first ingest the intrusion sink does not exist and
+    ``read_sink`` answers an empty frame: every page is empty, total 0."""
+    app = SecurityLogApp(spark, str(tmp_path / "sink"), str(tmp_path / "dims"))
+    for offset, limit in [(0, 10), (20, 10), (0, 0)]:
+        assert app.intrusion_log_get(offset=offset, limit=limit) == {
+            "pagination": {"total": 0, "offset": offset, "limit": limit},
+            "data": [],
+        }
+
+
+@pytest.mark.parametrize("query", ["offset=-1", "limit=-5"])
+def test_negative_page_bounds_return_http_error(served_app, query):
+    _, port = served_app
+    for route in ("intrusion_log", "log_messages", "host_country"):
+        status, body = _get(port, f"/security_log/{route}?{query}")
+        assert status == 500
+        assert "must be >= 0" in body
+
+
 def test_none_resolver_skips_dangling_hosts(spark, tmp_path_factory):
     """ADVICE r2: without a real whois resolver, /cleanup must not persist
     fabricated country codes — unresolved hosts stay dangling."""

@@ -12,6 +12,7 @@ import contextlib
 import io
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import TESTDATA_SF_SMALL
@@ -53,6 +54,15 @@ def test_scan_prunes_html_column(spark):
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
     assert read_schema, plan
     assert all("html" not in l for l in read_schema), read_schema
+
+
+def test_fused_parse_routes_each_line_once(spark):
+    """The routing key is generated by the line barrier, so the sinks'
+    filters on it stay above the barrier instead of re-deriving the whole
+    routing from ``line`` below it; and the journald record is parsed by
+    one ``from_json``, not one pruned copy per field read."""
+    plan = extract_events(_pages(spark))["events"]._jdf.queryExecution()
+    assert plan.optimizedPlan().toString().count("from_json") == 1
 
 
 def test_fused_parse_is_single_scan_no_shuffle(spark):
@@ -189,3 +199,66 @@ def test_winnow_keys_materialized_behind_barrier(spark):
     assert not bad, bad[:2]
     # two generators: the materialization barrier and the fps explode
     assert plan.count("Generate") >= 2, plan[:1500]
+
+
+# --------------------------------------------------------------------------
+# Job budget per report request kind
+# --------------------------------------------------------------------------
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs started by ``fn()``, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status tracker is fed by the listener bus; drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def report_app(spark, tmp_path_factory):
+    from security_log_analysis_rust_spark.http_api import SecurityLogApp
+    from security_log_analysis_rust_spark.pipeline.checkpoint import run_incremental
+
+    paths = ensure_synthetic(TESTDATA_SF_SMALL)
+    sink = str(tmp_path_factory.mktemp("budget") / "sink")
+    run_incremental(spark, paths["pages"], sink, files_per_split=4)
+    return SecurityLogApp(
+        spark, sink, os.path.dirname(paths["host_country"]), as_of="2024-12-31"
+    )
+
+
+def _rejected_page(app):
+    with pytest.raises(ValueError):
+        app.intrusion_log_get(offset=-1)
+
+
+#: (request, call, most jobs it may run). Reads of owned tables declare
+#: their schema, so they start no inference job; a page's total is observed
+#: on the page query; the country counts are broadcast joins, one
+#: aggregate exchange and a one-partition sort; a negative page bound is
+#: rejected before any job.
+JOB_BUDGET = [
+    ("read_sink", lambda app: app._intrusions(), 0),
+    ("dims_read", lambda app: app._dims(), 0),
+    ("systemd_read", lambda app: app._systemd(), 0),
+    ("intrusion_log_get",
+     lambda app: app.intrusion_log_get(service="ssh", offset=10, limit=20), 1),
+    ("log_messages",
+     lambda app: app.log_messages(log_level="error", min_date="2024-03-01",
+                                  offset=5, limit=10), 1),
+    ("host_country_get", lambda app: app.host_country_get(offset=2, limit=5), 1),
+    ("country_count", lambda app: app.country_count(None, None, 365), 4),
+    ("negative_offset", _rejected_page, 0),
+]
+
+
+@pytest.mark.parametrize("kind,call,budget", JOB_BUDGET, ids=[k for k, _, _ in JOB_BUDGET])
+def test_report_request_job_budget(spark, report_app, kind, call, budget):
+    assert _jobs(spark, lambda: call(report_app)) <= budget

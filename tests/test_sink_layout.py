@@ -138,3 +138,66 @@ def test_compact_crash_between_renames_is_repaired_on_read(spark, tmp_path, monk
     assert not [p for p in os.listdir(sink) if p.startswith((".tmp.", "_old."))]
     assert compact_intrusion_log(spark, sink) > 0
     assert _multiset(spark, sink) == rows
+
+
+def _types(schema) -> list:
+    """``(name, type)`` per column: a schema with nullability ignored."""
+    return [(f.name, f.dataType) for f in schema.fields]
+
+
+def test_writers_write_the_declared_schemas(spark, tmp_path):
+    """Owned tables are read with the schemas ``schemas.py`` declares, but
+    Spark types a parquet column by the file. So each writer must write
+    exactly the declared schema: what Spark infers from its output equals
+    the declaration, nullability aside."""
+    import json
+    from datetime import datetime
+
+    from pyspark.sql.types import StringType
+
+    from security_log_analysis_rust_spark.pipeline.checkpoint import run_incremental
+    from security_log_analysis_rust_spark.pipeline.dims import (
+        overwrite_dim,
+        read_dim,
+        upsert_host_country,
+    )
+    from security_log_analysis_rust_spark.schemas import (
+        COUNTRY_CODE_SCHEMA,
+        HOST_COUNTRY_SCHEMA,
+        SYSTEMD_LOG_MESSAGES_SCHEMA,
+    )
+    from security_log_analysis_rust_spark.synth.dims import write_dims
+
+    # both sinks: append_dedup and the per-split systemd write
+    ssh = "Jun 12 10:00:00 host sshd[1]: Invalid user bob from 1.2.3.4 port 22"
+    journald = json.dumps({"__REALTIME_TIMESTAMP": "1655046591494032",
+                           "MESSAGE": "disk error", "UNIT": "a.service"})
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [("https://a/log", datetime(2022, 6, 12), f"{ssh}\n{journald}")],
+        "url string, warc_ts timestamp, text string",
+    ).coalesce(1).write.parquet(pages)
+    sink = str(tmp_path / "sink")
+    run_incremental(spark, pages, sink, files_per_split=1, filters=())
+    intr = spark.read.parquet(os.path.join(sink, "intrusion_log")).schema
+    assert _types(intr) == _types(INTRUSION_LOG_SCHEMA) + [(MONTH_COL, StringType())]
+    sysd = spark.read.option("recursiveFileLookup", "true").parquet(
+        os.path.join(sink, "systemd_log_messages")
+    ).schema
+    assert _types(sysd) == _types(SYSTEMD_LOG_MESSAGES_SCHEMA)
+
+    # the synthetic dims writer
+    dims = str(tmp_path / "dims")
+    write_dims(dims)
+    for name, declared in (("host_country", HOST_COUNTRY_SCHEMA),
+                           ("country_code", COUNTRY_CODE_SCHEMA)):
+        got = spark.read.parquet(os.path.join(dims, f"{name}.parquet")).schema
+        assert _types(got) == _types(declared), name
+
+    # the dim upsert's overwrite
+    updates = spark.createDataFrame([("203.0.113.9", "AQ", None, None)],
+                                    HOST_COUNTRY_SCHEMA)
+    hc_path = os.path.join(dims, "host_country.parquet")
+    overwrite_dim(upsert_host_country(read_dim(spark, dims, "host_country"), updates),
+                  hc_path)
+    assert _types(spark.read.parquet(hc_path).schema) == _types(HOST_COUNTRY_SCHEMA)
