@@ -49,17 +49,24 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dims(spark: SparkSession, sf_dir: str):
+    from security_log_analysis_rust_spark.pipeline.dims import read_dims
+
     paths = _prep(spark, sf_dir)
-    return (
-        spark.read.parquet(paths["host_country"]),
-        spark.read.parquet(paths["country_code"]),
-    )
+    return read_dims(spark, os.path.dirname(paths["host_country"]))
 
 
 def _events(spark, sf_dir) -> DataFrame:
     from security_log_analysis_rust_spark.pipeline.parse import extract_events
 
     return extract_events(_pages(spark, sf_dir))["events"]
+
+
+def _routed(spark, sf_dir, *kinds) -> DataFrame:
+    """The parse router's rows of the routing ``kinds``."""
+    from security_log_analysis_rust_spark.pipeline.parse import extract_events
+
+    routed = extract_events(_pages(spark, sf_dir))["routed"]
+    return routed.filter(F.col("kind").isin(*kinds))
 
 
 def _systemd(spark, sf_dir) -> DataFrame:
@@ -182,33 +189,17 @@ def _doc_shingles(docs: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def q_ssh_events(spark, sf_dir):
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        pages_to_lines,
-        parse_ssh_lines,
-    )
-
-    return parse_ssh_lines(pages_to_lines(_pages(spark, sf_dir))).select(*_EVENT_PROJ)
+    return _routed(spark, sf_dir, "ssh").select(*_EVENT_PROJ)
 
 
 def q_apache_events(spark, sf_dir):
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        pages_to_lines,
-        parse_apache_lines,
-    )
-
-    return parse_apache_lines(pages_to_lines(_pages(spark, sf_dir))).select(
-        *_EVENT_PROJ
-    )
+    return _routed(spark, sf_dir, "apache").select(*_EVENT_PROJ)
 
 
 def q_journald_events(spark, sf_dir):
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        pages_to_lines,
-        parse_journald_lines,
-    )
+    from security_log_analysis_rust_spark.pipeline.parse import JOURNALD_KINDS
 
-    intr, _ = parse_journald_lines(pages_to_lines(_pages(spark, sf_dir)))
-    return intr.select(*_EVENT_PROJ)
+    return _routed(spark, sf_dir, *JOURNALD_KINDS).select(*_EVENT_PROJ)
 
 
 def q_journald_running_totals(spark, sf_dir):
@@ -220,14 +211,9 @@ def q_journald_running_totals(spark, sf_dir):
     ties on datetime deterministic — all peers share the same total — so
     the result is oracle-comparable. A pytest differential additionally
     pins stream-final == max(running_total) per host on a shared input."""
-    from pyspark.sql import Window
+    from security_log_analysis_rust_spark.pipeline.parse import JOURNALD_KINDS
 
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        pages_to_lines,
-        parse_journald_lines,
-    )
-
-    intr, _ = parse_journald_lines(pages_to_lines(_pages(spark, sf_dir)))
+    intr = _routed(spark, sf_dir, *JOURNALD_KINDS)
     w = (
         Window.partitionBy("host")
         .orderBy("datetime")
@@ -461,19 +447,60 @@ def q_docs_exact_dedup(spark, sf_dir):
     )
 
 
-def q_docs_langid(spark, sf_dir):
+def _marker_count(p: str):
+    """Occurrences of the space-padded word ``p`` in the lower-cased
+    ``text``, itself padded with a space at each end."""
     t = F.concat(F.lit(" "), F.lower("text"), F.lit(" "))
+    return (
+        (F.length(t) - F.length(F.replace(t, F.lit(p), F.lit(" "))))
+        / (len(p) - 1)
+    ).cast("int")
 
-    def cnt(p):
-        return (
-            (F.length(t) - F.length(F.replace(t, F.lit(p), F.lit(" "))))
-            / (len(p) - 1)
-        ).cast("int")
 
-    en = (cnt(" the ") + cnt(" and ") + cnt(" of ")).alias("en_score")
-    de = (cnt(" der ") + cnt(" und ") + cnt(" die ")).alias("de_score")
-    fr = (cnt(" le ") + cnt(" et ") + cnt(" la ")).alias("fr_score")
-    df = _docs(spark, sf_dir).select("doc_id", en, de, fr)
+def _langid_scores():
+    """The (en, de, fr) marker-word scores of ``text``."""
+    return tuple(
+        _marker_count(a) + _marker_count(b) + _marker_count(c)
+        for a, b, c in (
+            (" the ", " and ", " of "),
+            (" der ", " und ", " die "),
+            (" le ", " et ", " la "),
+        )
+    )
+
+
+def _quality_parts():
+    """(n_tokens, stopword_count, punct_count) of ``text``: whitespace
+    tokens, ``the`` markers, and characters neither alphanumeric nor
+    space."""
+    n = F.size(F.split(F.trim("text"), r"\s+"))
+    punct = F.length(F.regexp_replace("text", r"[a-zA-Z0-9\s]", "")).cast("int")
+    return n, _marker_count(" the "), punct
+
+
+def _quality_gate(n, stop, punct):
+    """The heuristic quality gate over :func:`_quality_parts`."""
+    return (n >= 5) & (punct * 5 < n) & (stop > 0)
+
+
+def _dup_2gram_frac(toks):
+    """Fraction of the adjacent token pairs of the array ``toks`` that
+    repeat an earlier pair (0 for fewer than two tokens)."""
+    bi = F.zip_with(
+        F.slice(toks, 1, F.size(toks) - 1),
+        F.slice(toks, 2, F.size(toks) - 1),
+        lambda a, b: F.concat(a, F.lit("\x01"), b),
+    )
+    return F.when(F.size(toks) <= 1, F.lit(0.0)).otherwise(
+        F.round(1 - F.size(F.array_distinct(bi)) / (F.size(toks) - 1), 6)
+    )
+
+
+def q_docs_langid(spark, sf_dir):
+    en, de, fr = _langid_scores()
+    df = _docs(spark, sf_dir).select(
+        "doc_id", en.alias("en_score"), de.alias("de_score"), fr.alias("fr_score")
+    )
     guess = (
         F.when(
             (F.col("en_score") >= F.col("de_score"))
@@ -487,23 +514,18 @@ def q_docs_langid(spark, sf_dir):
 
 
 def q_docs_quality(spark, sf_dir):
-    toks = F.split(F.trim("text"), r"\s+")
-    t = F.concat(F.lit(" "), F.lower("text"), F.lit(" "))
-    stop = (
-        (F.length(t) - F.length(F.replace(t, F.lit(" the "), F.lit(" ")))) / 4
-    ).cast("int")
-    punct = F.length(F.regexp_replace("text", r"[a-zA-Z0-9\s]", "")).cast("int")
+    n, stop, punct = _quality_parts()
     df = _docs(spark, sf_dir).select(
         "doc_id",
-        F.size(toks).alias("n_tokens"),
+        n.alias("n_tokens"),
         stop.alias("stopword_count"),
         punct.alias("punct_count"),
     )
     return df.withColumn(
         "is_quality",
-        (F.col("n_tokens") >= 5)
-        & (F.col("punct_count") * 5 < F.col("n_tokens"))
-        & (F.col("stopword_count") > 0),
+        _quality_gate(
+            F.col("n_tokens"), F.col("stopword_count"), F.col("punct_count")
+        ),
     )
 
 
@@ -520,20 +542,8 @@ def q_docs_repetition(spark, sf_dir):
     docs = _spread_small_input(_docs(spark, sf_dir))
     toks = F.split(F.lower(F.trim("text")), r"\s+")
     arr = docs.select("doc_id", toks.alias("toks"))
-    bi = F.zip_with(
-        F.slice("toks", 1, F.size("toks") - 1),
-        F.slice("toks", 2, F.size("toks") - 1),
-        lambda a, b: F.concat(a, F.lit("\x01"), b),
-    )
     bi_stats = arr.select(
-        "doc_id",
-        F.when(F.size("toks") <= 1, F.lit(0.0))
-        .otherwise(
-            F.round(
-                1 - F.size(F.array_distinct(bi)) / (F.size("toks") - 1), 6
-            )
-        )
-        .alias("dup_2gram_frac"),
+        "doc_id", _dup_2gram_frac(F.col("toks")).alias("dup_2gram_frac")
     )
     tc = (
         arr.select("doc_id", F.explode("toks").alias("tok"))
@@ -639,35 +649,12 @@ def q_docs_training_corpus(spark, sf_dir):
     from security_log_analysis_rust_spark.textops.util import explode_barrier
 
     d = _spread_small_input(_docs(spark, sf_dir))
-    t = F.concat(F.lit(" "), F.lower("text"), F.lit(" "))
-
-    def cnt(p):
-        return (
-            (F.length(t) - F.length(F.replace(t, F.lit(p), F.lit(" "))))
-            / (len(p) - 1)
-        ).cast("int")
-
-    en = cnt(" the ") + cnt(" and ") + cnt(" of ")
-    de = cnt(" der ") + cnt(" und ") + cnt(" die ")
-    fr = cnt(" le ") + cnt(" et ") + cnt(" la ")
+    en, de, fr = _langid_scores()
     lang_ok = (en >= de) & (en >= fr)
-
-    nq = F.size(F.split(F.trim("text"), r"\s+"))
-    stop = (
-        (F.length(t) - F.length(F.replace(t, F.lit(" the "), F.lit(" ")))) / 4
-    ).cast("int")
-    punct = F.length(F.regexp_replace("text", r"[a-zA-Z0-9\s]", "")).cast("int")
-    qual_ok = (nq >= 5) & (punct * 5 < nq) & (stop > 0)
+    qual_ok = _quality_gate(*_quality_parts())
 
     toks = F.col("__toks")
-    bi = F.zip_with(
-        F.slice(toks, 1, F.size(toks) - 1),
-        F.slice(toks, 2, F.size(toks) - 1),
-        lambda a, b: F.concat(a, F.lit("\x01"), b),
-    )
-    dup2 = F.when(F.size(toks) <= 1, F.lit(0.0)).otherwise(
-        F.round(1 - F.size(F.array_distinct(bi)) / (F.size(toks) - 1), 6)
-    )
+    dup2 = _dup_2gram_frac(toks)
 
     def _run(acc, x):
         return F.when(x == acc["prev"], acc["run"] + F.lit(1)).otherwise(

@@ -8,10 +8,13 @@ line::
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...}, "sf": ..., "docs_per_sec": ..., "lines_per_sec": ...}
 
-``--scaling``: run the same parse+enrich+aggregate job at two parallelism
-levels (local[8] vs local[32]) over an input replicated large enough to be
-compute-bound, and report throughput at both plus scaling efficiency
-(the in-sandbox stand-in for the north rule's N -> 4N executor criterion).
+``--scaling``: run the same parse -> enrich -> route -> aggregate job at two
+parallelism levels (local[8] vs local[32]) over an input replicated large
+enough to be compute-bound, and report throughput at both plus scaling
+efficiency (the in-sandbox stand-in for the north rule's N -> 4N executor
+criterion). The job writes both sinks with the ingest's own writers
+(``route.append_dedup`` into ``<tmp>/intrusion_log``, ``route.write_systemd``)
+and reads the intrusion sink back through ``route.read_sink``.
 """
 
 from __future__ import annotations
@@ -35,13 +38,13 @@ def _spark(cpus: int, shuffle: int):
 
 
 def _pipeline_dfs(spark, sf_dir, replicate: int = 1):
+    from security_log_analysis_rust_spark.pipeline.dims import read_dims
     from security_log_analysis_rust_spark.pipeline.parse import extract_events
     from security_log_analysis_rust_spark.synth import ensure_synthetic
 
     paths = ensure_synthetic(sf_dir)
     pages = spark.read.parquet(*([paths["pages"]] * replicate))
-    hc = spark.read.parquet(paths["host_country"])
-    cc = spark.read.parquet(paths["country_code"])
+    hc, cc = read_dims(spark, os.path.dirname(paths["host_country"]))
     out = extract_events(pages)
     return pages, out["events"], out["systemd"], hc, cc
 
@@ -389,94 +392,84 @@ def run_scaling_level(
     import shutil
     import tempfile
 
-    from security_log_analysis_rust_spark.pipeline.enrich import enrich_events
-    from security_log_analysis_rust_spark.pipeline.route import (
-        dedup_intrusions,
-        to_intrusion_log,
-        to_systemd_log_messages,
+    from security_log_analysis_rust_spark.pipeline.aggregate import (
+        per_country_counts,
     )
+    from security_log_analysis_rust_spark.pipeline.enrich import enrich_events
+    from security_log_analysis_rust_spark.pipeline.parse import extract_events
+    from security_log_analysis_rust_spark.pipeline.route import (
+        append_dedup,
+        dedup_intrusions,
+        read_sink,
+        to_intrusion_log,
+        write_systemd,
+    )
+    from security_log_analysis_rust_spark.schemas import INTRUSION_LOG_SCHEMA
 
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
     spark = _spark(cpus, shuffle=max(cpus * 2, 16))
     # make input splittable enough for the widest level
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     try:
-        if True:
-            pages, events, systemd, hc, cc = _pipeline_dfs(
-                spark, sf_dir, replicate=replicate
-            )
-            n_pages = pages.count()
+        pages, events, _, hc, cc = _pipeline_dfs(spark, sf_dir, replicate=replicate)
+        n_pages = pages.count()
 
-            from pyspark.sql import functions as F
+        def job():
+            """The north-rule unit of work: parse -> enrich -> route ->
+            aggregate, by the ingest's own writers: one persisted parse
+            feeds the deduped intrusion-sink append and the systemd write,
+            and the per-country aggregate reads the intrusion sink back.
+            Returns the rows written to each sink."""
+            out = tempfile.mkdtemp(prefix=f"bench-sink-{cpus}-")
+            parsed = extract_events(pages, persist=True)
+            try:
+                intr_path = os.path.join(out, "intrusion_log")
+                n_intr = append_dedup(
+                    spark,
+                    intr_path,
+                    to_intrusion_log(dedup_intrusions(parsed["events"])),
+                )
+                n_sys = write_systemd(
+                    parsed["systemd"],
+                    os.path.join(out, "systemd_log_messages", "split=0"),
+                )
+                intr = read_sink(spark, intr_path, INTRUSION_LOG_SCHEMA)
+                per_country_counts(
+                    enrich_events(intr, hc, cc, how="inner")
+                ).collect()
+                return n_intr, n_sys
+            finally:
+                parsed["parsed"].unpersist()
+                shutil.rmtree(out, ignore_errors=True)
 
-            from security_log_analysis_rust_spark.pipeline.aggregate import (
-                per_country_counts,
-            )
-            from security_log_analysis_rust_spark.pipeline.parse import (
-                extract_events,
-            )
-            from security_log_analysis_rust_spark.pipeline.route import (
-                write_sinks_single_pass,
-            )
-
-            routed = extract_events(pages)["routed"]
-
-            def job(verify: bool = False):
-                """The north-rule unit of work: parse -> enrich -> route ->
-                aggregate. One scan, one shuffle, one partitioned write for
-                BOTH sinks; per-country enrichment aggregate reads back the
-                (small) intrusion sink. Row-count verification only on the
-                unmeasured cold pass."""
-                out = tempfile.mkdtemp(prefix=f"bench-sink-{cpus}-")
-                try:
-                    write_sinks_single_pass(routed, out)
-                    intr = spark.read.parquet(out).filter(
-                        F.col("sink") == "intrusion_log"
-                    )
-                    per_country_counts(
-                        enrich_events(intr, hc, cc, how="inner")
-                    ).collect()
-                    if not verify:
-                        return None, None
-                    n_intr = intr.count()
-                    n_sys = (
-                        spark.read.parquet(out)
-                        .filter(F.col("sink") == "systemd_log_messages")
-                        .count()
-                    )
-                    return n_intr, n_sys
-                finally:
-                    shutil.rmtree(out, ignore_errors=True)
-
+        t0 = time.time()
+        n_intr, n_sys = job()  # cold pass, not measured
+        cold = time.time() - t0
+        best = float("inf")
+        for _ in range(trials):
             t0 = time.time()
-            n_intr, n_sys = job(verify=True)  # cold pass, not measured
-            cold = time.time() - t0
-            best = float("inf")
-            for _ in range(trials):
-                t0 = time.time()
-                job()
-                best = min(best, time.time() - t0)
-            # parse-stage-only throughput: the input-scan-bound stage that
-            # dominates at the 100 TB design point
+            job()
+            best = min(best, time.time() - t0)
+        # parse-stage-only throughput: the input-scan-bound stage that
+        # dominates at the 100 TB design point
+        events.count()
+        parse_best = float("inf")
+        for _ in range(trials):
+            t0 = time.time()
             events.count()
-            parse_best = float("inf")
-            for _ in range(trials):
-                t0 = time.time()
-                events.count()
-                parse_best = min(parse_best, time.time() - t0)
-            level_result = {
-                "seconds": round(best, 2),
-                "cold_seconds": round(cold, 2),
-                "parse_seconds": round(parse_best, 2),
-                "pages": n_pages,
-                "docs_per_sec": round(n_pages / best, 1),
-                "parse_docs_per_sec": round(n_pages / parse_best, 1),
-                "intrusion_rows": n_intr,
-                "systemd_rows": n_sys,
-            }
+            parse_best = min(parse_best, time.time() - t0)
+        return {
+            "seconds": round(best, 2),
+            "cold_seconds": round(cold, 2),
+            "parse_seconds": round(parse_best, 2),
+            "pages": n_pages,
+            "docs_per_sec": round(n_pages / best, 1),
+            "parse_docs_per_sec": round(n_pages / parse_best, 1),
+            "intrusion_rows": n_intr,
+            "systemd_rows": n_sys,
+        }
     finally:
         spark.stop()
-    return level_result
 
 
 def run_correctness(sf_dir: str, cpus: int) -> dict:

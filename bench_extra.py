@@ -48,6 +48,7 @@ def _headline_queries(spark, sf_dir):
         per_day_counts,
         per_host_counts,
     )
+    from security_log_analysis_rust_spark.pipeline.dims import read_dims
     from security_log_analysis_rust_spark.pipeline.enrich import enrich_events
     from security_log_analysis_rust_spark.pipeline.parse import extract_events
     from security_log_analysis_rust_spark.pipeline.route import dedup_intrusions
@@ -55,8 +56,7 @@ def _headline_queries(spark, sf_dir):
 
     paths = ensure_synthetic(sf_dir)
     pages = spark.read.parquet(paths["pages"])
-    hc = spark.read.parquet(paths["host_country"])
-    cc = spark.read.parquet(paths["country_code"])
+    hc, cc = read_dims(spark, os.path.dirname(paths["host_country"]))
     out = extract_events(pages)
     events, systemd = out["events"], out["systemd"]
     return {

@@ -13,6 +13,7 @@ On a real cluster the same command targets ``--master yarn``/``k8s`` with
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -24,6 +25,7 @@ def main(sf_dir: str) -> None:
 
     # --py-files puts the zip on the python path for driver and executors
     from security_log_analysis_rust_spark.pipeline.aggregate import per_country_counts
+    from security_log_analysis_rust_spark.pipeline.dims import read_dims
     from security_log_analysis_rust_spark.pipeline.enrich import enrich_events
     from security_log_analysis_rust_spark.pipeline.parse import extract_events
     from security_log_analysis_rust_spark.pipeline.route import dedup_intrusions
@@ -31,8 +33,7 @@ def main(sf_dir: str) -> None:
 
     paths = ensure_synthetic(sf_dir)
     pages = spark.read.parquet(paths["pages"])
-    hc = spark.read.parquet(paths["host_country"])
-    cc = spark.read.parquet(paths["country_code"])
+    hc, cc = read_dims(spark, os.path.dirname(paths["host_country"]))
     out = extract_events(pages)
     intr = dedup_intrusions(out["events"])
     top = per_country_counts(enrich_events(intr, hc, cc, how="inner")).limit(5)

@@ -31,7 +31,7 @@ import time
 from dataclasses import dataclass, field
 from typing import List, Optional
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import INTRUSION_LOG_SCHEMA
@@ -43,7 +43,7 @@ from .route import (
     read_sink,
     read_systemd_sink,
     to_intrusion_log,
-    to_systemd_log_messages,
+    write_systemd,
 )
 
 
@@ -234,15 +234,10 @@ def run_incremental(
                 spark, intr_path, to_intrusion_log(events), key=UNIQUE_KEY,
                 since=since,
             )
-            # per-split overwrite => idempotent re-run without a unique key;
-            # the row count is observed on the write itself (no second job)
-            sysd_seen = Observation()
-            to_systemd_log_messages(out["systemd"]).observe(
-                sysd_seen, F.count(F.lit(1)).alias("n")
-            ).write.mode("overwrite").parquet(
-                os.path.join(sysd_path, f"split={sid}")
+            # per-split overwrite => idempotent re-run without a unique key
+            n_sysd = write_systemd(
+                out["systemd"], os.path.join(sysd_path, f"split={sid}")
             )
-            n_sysd = sysd_seen.get["n"]
         finally:
             out["parsed"].unpersist()
 

@@ -1,7 +1,9 @@
 """Parse stage: pages -> lines -> typed events (all narrow, no shuffle).
 
-Maps the reference's per-source parsers onto one line-routed DataFrame DAG
-(SURVEY.md §2.1-§2.4). Routing precedence per line:
+Maps the reference's per-source parsers onto one line router,
+:func:`route_lines` (SURVEY.md §2.1-§2.4): every consumer of parsed lines —
+the batch ingest, the ``__spark_entry__`` queries and the journald stream —
+reads its rows from it. Routing precedence per line:
 
 1. journald JSON  (starts with ``{`` and mentions ``__REALTIME_TIMESTAMP``)
    -> ssh / nginx / leveled-message routing (``src/parse_logs.rs:261-302,
@@ -16,9 +18,10 @@ extraction are all built-in column expressions, so the whole parse stage
 runs inside whole-stage codegen with zero Python workers. Each parse
 expression has one builder: the tokenizer, timestamp and level builders
 below, the extraction and byte truncation in ``parsing/exprs.py``;
-``parsing/core.py`` is the pure-Python spec they are tested against. Everything uses ``try_*`` variants so the
-stage is safe under ANSI mode (Spark 4 default) — unparseable rows drop
-instead of failing a 100 TB job.
+``parsing/core.py`` (with ``oracle.py``'s routing over it) is the
+pure-Python spec the router is tested against. Everything uses ``try_*``
+variants so the stage is safe under ANSI mode (Spark 4 default) —
+unparseable rows drop instead of failing a 100 TB job.
 
 Scale notes: every transform here is narrow (filter/project over the line
 explode), so this stage never shuffles; it scales linearly with input splits
@@ -29,7 +32,7 @@ from __future__ import annotations
 
 from functools import reduce
 from operator import or_
-from typing import Sequence, Tuple
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -44,8 +47,6 @@ IPV4_RE = (
     r"^((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}"
     r"(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])$"
 )
-
-_EVENT_COLS = ["url", "line_no", "service", "server", "datetime", "host", "username"]
 
 
 def pages_to_lines(pages: DataFrame) -> DataFrame:
@@ -132,145 +133,8 @@ def is_filtered(line: Column, filters: Sequence[str]) -> Column:
     return reduce(or_, [line.contains(f) for f in filters], F.lit(False))
 
 
-def parse_ssh_lines(lines: DataFrame) -> DataFrame:
-    """ssh auth lines -> events (P1+P2; service='ssh'), timestamped by
-    :func:`ssh_ts_expr` with year = year(warc_ts)."""
-    line = F.col("line")
-    df = (
-        lines.filter(is_ssh_auth(line))
-        .withColumn("toks", tokens_expr(line))
-        .filter(F.size("toks") >= 10)  # F2 token guard (parse_logs.rs:93-96)
-        .withColumn("datetime", ssh_ts_expr(F.year("warc_ts")))
-        .withColumn("ex", invalid_user_expr(line))
-    )
-    return df.filter(
-        F.col("datetime").isNotNull() & F.col("ex.host").isNotNull()
-    ).select(
-        "url",
-        "line_no",
-        F.lit("ssh").alias("service"),
-        server_col().alias("server"),
-        "datetime",
-        F.col("ex.host").alias("host"),
-        F.col("ex.username").alias("username"),
-    )
-
-
-def parse_apache_lines(lines: DataFrame) -> DataFrame:
-    """apache CLF candidates -> events (P3; service='apache', username NULL)."""
-    line = F.col("line")
-    df = (
-        lines.filter(~is_journald(line) & ~is_ssh_auth(line))
-        .withColumn("toks", tokens_expr(line))
-        .filter(F.size("toks") >= 5)  # F2 (parse_logs.rs:209-212)
-        .withColumn("host", trunc_bytes_expr(F.get("toks", 0), HOST_BYTES))
-        .filter(F.col("host").contains("."))  # F3 (parse_logs.rs:215-217)
-        .withColumn("datetime", apache_ts_expr())
-        .filter(F.col("datetime").isNotNull())
-    )
-    return df.select(
-        "url",
-        "line_no",
-        F.lit("apache").alias("service"),
-        server_col().alias("server"),
-        "datetime",
-        "host",
-        F.lit(None).cast("string").alias("username"),
-    )
-
-
-def parse_journald_lines(
-    lines: DataFrame,
-    filters: Sequence[str] = DEFAULT_SYSTEMD_LOG_FILTERS,
-) -> Tuple[DataFrame, DataFrame]:
-    """journald JSON lines -> (intrusion events, systemd messages).
-
-    Mirrors the daemon routing (parse_logs.rs:328-371): blacklist filter
-    first (F6), then 'Invalid user ' -> ssh, then 'nginx' with a strict-IPv4
-    token[2] -> nginx, else leveled-message classification (P7) over the raw
-    line. µs-epoch timestamps via ``timestamp_micros`` (P4).
-    """
-    line = F.col("line")
-    blacklist = is_filtered(line, filters)
-    j = (
-        lines.filter(is_journald(line))
-        .filter(~blacklist)
-        .withColumn("rec", F.from_json(line, JOURNALD_SCHEMA))
-        .withColumn(
-            "jts",
-            F.timestamp_micros(
-                F.col("rec.__REALTIME_TIMESTAMP").try_cast("long")
-            ),
-        )
-        .filter(F.col("jts").isNotNull())
-    )
-
-    is_invalid_user = line.contains("Invalid user ")
-    ssh = (
-        j.filter(is_invalid_user)
-        .withColumn("ex", invalid_user_expr(F.col("rec.MESSAGE")))
-        .filter(F.col("ex.host").isNotNull())
-        .select(
-            "url",
-            "line_no",
-            F.lit("ssh").alias("service"),
-            server_col().alias("server"),
-            F.col("jts").alias("datetime"),
-            F.col("ex.host").alias("host"),
-            F.col("ex.username").alias("username"),
-        )
-    )
-
-    mtoks = tokens_expr(F.col("rec.MESSAGE"))
-    nginx_host = trunc_bytes_expr(F.get(mtoks, 2), HOST_BYTES)
-    nginx_ok = (
-        ~is_invalid_user
-        & line.contains("nginx")
-        & (F.size(mtoks) >= 3)
-        & nginx_host.rlike(IPV4_RE)
-    )
-    nginx = j.filter(nginx_ok).select(
-        "url",
-        "line_no",
-        F.lit("nginx").alias("service"),
-        server_col().alias("server"),
-        F.col("jts").alias("datetime"),
-        nginx_host.alias("host"),
-        F.lit(None).cast("string").alias("username"),
-    )
-
-    # leveled messages: everything not routed above (failed nginx parses
-    # fall through, parse_logs.rs:354-363); classifier on the raw line
-    level = level_expr(line)
-    systemd = (
-        j.filter(~is_invalid_user & ~nginx_ok)
-        .withColumn("log_level", level)
-        .filter(F.col("log_level").isNotNull())
-        .select(
-            "url",
-            "line_no",
-            "log_level",
-            F.col("rec.UNIT").alias("log_unit"),
-            F.col("rec.MESSAGE").alias("log_message"),
-            F.col("jts").alias("log_timestamp"),
-        )
-    )
-    return ssh.unionByName(nginx), systemd
-
-
-def extract_events_union(pages: DataFrame) -> dict:
-    """Parse stage as a union of the per-source branch operators.
-
-    Definitional form (each branch mirrors one reference parser 1:1); kept
-    for per-branch queries and as the equivalence oracle for the fused
-    single-pass plan below.
-    """
-    lines = pages_to_lines(pages)
-    ssh = parse_ssh_lines(lines)
-    apache = parse_apache_lines(lines)
-    j_intr, systemd = parse_journald_lines(lines)
-    events = ssh.unionByName(apache).unionByName(j_intr).select(*_EVENT_COLS)
-    return {"events": events, "systemd": systemd, "lines": lines}
+#: routing kinds of journald lines that feed the intrusion sink
+JOURNALD_KINDS = ("jssh", "jnginx")
 
 
 def extract_events(
@@ -278,14 +142,32 @@ def extract_events(
     filters: Sequence[str] = DEFAULT_SYSTEMD_LOG_FILTERS,
     persist: bool = False,
 ) -> dict:
-    """Full parse stage, fused single-pass: pages -> {events, systemd, lines}.
+    """Full parse stage: pages -> :func:`route_lines` of their lines."""
+    return route_lines(pages_to_lines(pages), filters, persist)
 
-    Semantically identical to :func:`extract_events_union` (tested), but the
-    whole route is ONE projection over ONE explode of ONE scan, and the
-    extraction runs once per line instead of once per branch. At 100 TB the
-    input scan dominates, so branch unions (3-4 scans) are the wrong plan;
-    this is the plan you'd want: scan -> narrow project/filter, zero
-    redundant passes.
+
+def route_lines(
+    lines: DataFrame,
+    filters: Sequence[str] = DEFAULT_SYSTEMD_LOG_FILTERS,
+    persist: bool = False,
+) -> dict:
+    """The one Spark parse: ``(url, warc_ts, line_no, line)`` rows ->
+    ``{events, systemd, routed, parsed}``.
+
+    Each line gets one routing ``kind`` (``jssh``, ``jnginx``, ``systemd``,
+    ``ssh``, ``apache``; unrouted lines drop) in ONE projection over the
+    line rows, and the extraction runs once per line. A journald line
+    follows the daemon routing (parse_logs.rs:328-371): the blacklist
+    ``filters`` first (F6), then 'Invalid user ' -> ``jssh``, then 'nginx'
+    with a strict-IPv4 token[2] -> ``jnginx``, else the level classifier
+    (P7) -> ``systemd``.
+
+    ``routed`` is every surviving line as one row with its ``kind``,
+    ``sink`` and the columns of both sinks; ``events`` and ``systemd`` are
+    its two sink projections. A consumer of one source takes its kinds
+    from ``routed`` (e.g. :data:`JOURNALD_KINDS` for a journald stream).
+    ``persist=True`` materializes ``parsed`` for a caller that reads both
+    sinks; the caller unpersists it.
     """
     line = F.col("line")
     is_j = is_journald(line)
@@ -310,8 +192,7 @@ def extract_events(
     # The journald record is one column read by three fields, so Catalyst
     # keeps one from_json instead of one pruned copy per field.
     parsed0 = (
-        pages_to_lines(pages)
-        .withColumn("rec", F.from_json(F.when(is_j, line), JOURNALD_SCHEMA))
+        lines.withColumn("rec", F.from_json(F.when(is_j, line), JOURNALD_SCHEMA))
         .withColumns(
             {"msg": rec["MESSAGE"], "unit": rec["UNIT"], "jts": jts}
         )
@@ -385,13 +266,13 @@ def extract_events(
         parsed = parsed.persist(StorageLevel.MEMORY_AND_DISK)
 
     # Unified routed projection: every surviving line is exactly one sink
-    # row, so the whole fan-out is ONE narrow select — single-pass writers
-    # (route.write_sinks_single_pass) consume this directly and never
-    # rescan the input per sink.
+    # row, so the whole fan-out is ONE narrow select that both sink
+    # projections and every per-kind consumer read.
     is_intr = F.col("kind").isin("ssh", "apache", "jssh", "jnginx")
     routed = parsed.select(
         "url",
         "line_no",
+        "kind",
         F.when(is_intr, "intrusion_log")
         .otherwise("systemd_log_messages")
         .alias("sink"),
@@ -427,6 +308,5 @@ def extract_events(
         "events": events,
         "systemd": systemd,
         "routed": routed,
-        "lines": pages_to_lines(pages),
         "parsed": parsed,
     }

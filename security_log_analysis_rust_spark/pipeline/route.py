@@ -1,4 +1,4 @@
-"""Routing/sink stage: dedup + fan-out writers.
+"""Routing/sink stage: dedup + the sink writers.
 
 The reference routes parsed rows into Postgres tables with
 ``INSERT ... ON CONFLICT DO NOTHING`` against the unique key
@@ -8,13 +8,17 @@ The reference routes parsed rows into Postgres tables with
 exactly-once semantics are built from:
 
 * ``dedup_intrusions`` — deterministic keep-first over the unique key
-  (window ``row_number``; the reference's keep-first is insert-order
+  (``min_by`` per key; the reference's keep-first is insert-order
   dependent, ours is ordered by (username NULLS FIRST, url, line_no) and
   therefore reproducible — SURVEY.md §7.4.3);
 * ``append_dedup`` — anti-join against the existing sink before an append,
   replacing ON CONFLICT DO NOTHING (O8 -> K1). The anti-join, the row count
   and the write are one action: the count is a ``DataFrame.observe`` on the
   write itself.
+
+The systemd sink needs no dedup (the reference's table has no unique key):
+:func:`write_systemd` overwrites one directory per ingest split
+(``split=<id>``) or stream batch (``batch=<id>``).
 
 Layout: the intrusion sink is partitioned by month(datetime)
 (:data:`MONTH_COL`), and every writer goes through :func:`_write_months`,
@@ -91,10 +95,14 @@ def to_intrusion_log(deduped: DataFrame) -> DataFrame:
     )
 
 
-def to_systemd_log_messages(systemd: DataFrame) -> DataFrame:
-    """Project the systemd sink schema (``migrations/V07__log_messages.sql``);
-    ``processed_time`` starts NULL (V08)."""
-    return systemd.select(
+def write_systemd(systemd: DataFrame, path: str) -> int:
+    """The one systemd-sink writer: parsed systemd rows, projected to the
+    sink schema (``migrations/V07__log_messages.sql``; ``processed_time``
+    starts NULL, V08), overwrite the directory ``path`` — one per ingest
+    split or stream batch, so a re-run replaces its rows instead of
+    duplicating them. Returns the row count, observed on the write itself
+    (no second job)."""
+    rows = systemd.select(
         F.expr("uuid()").alias("id"),
         "log_level",
         "log_unit",
@@ -102,6 +110,9 @@ def to_systemd_log_messages(systemd: DataFrame) -> DataFrame:
         "log_timestamp",
         F.lit(None).cast("timestamp").alias("processed_time"),
     )
+    seen = Observation()
+    rows.observe(seen, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(path)
+    return seen.get["n"]
 
 
 def read_sink(
@@ -409,72 +420,3 @@ def compact_intrusion_log(spark: SparkSession, sink_path: str) -> int:
         _rewrite_month(sink_path, month, df.filter(F.col(MONTH_COL) == month))
     spark.catalog.refreshByPath(sink_path)
     return len(months)
-
-
-def write_sinks_single_pass(routed: DataFrame, out_dir: str) -> None:
-    """Fan-out both sinks in ONE job: scan -> narrow route projection ->
-    one dedup shuffle -> one partitioned write.
-
-    This is the 100 TB plan: the input is scanned exactly once regardless of
-    sink count. Dedup happens in the same shuffle for intrusion rows (their
-    key is the sink unique key) while systemd rows pass through (their key
-    is the row identity ``url#line_no`` — the reference's systemd table has
-    no unique constraint, duplicates are legal and preserved).
-    """
-    intr = F.col("sink") == "intrusion_log"
-    key = F.when(
-        intr,
-        F.concat_ws(
-            "\x01", "service", "server", F.col("datetime").cast("string"), "host"
-        ),
-    ).otherwise(F.concat_ws("\x01", "url", F.col("line_no").cast("string")))
-    order = F.struct(
-        F.col("username").isNotNull().cast("int"),
-        F.coalesce(F.col("username"), F.lit("")),
-        F.col("url"),
-        F.col("line_no"),
-    )
-    payload = F.struct(*[F.col(c) for c in routed.columns])
-    picked = (
-        routed.withColumn("__key", key)
-        .groupBy("sink", "__key")
-        .agg(F.min_by(payload, order).alias("__row"))
-        .select("__row.*")
-    )
-    # drop the duplicated sink inside __row and provenance columns; stamp ids
-    out = picked.select(
-        "sink",
-        F.expr("uuid()").alias("id"),
-        "service",
-        "server",
-        "datetime",
-        "host",
-        "username",
-        "log_level",
-        "log_unit",
-        "log_message",
-        "log_timestamp",
-    )
-    out.write.mode("overwrite").partitionBy("sink").parquet(out_dir)
-
-
-def write_sinks(
-    spark: SparkSession,
-    out_dir: str,
-    events: DataFrame,
-    systemd: DataFrame,
-) -> dict:
-    """Fan-out (K1-K5): one writer per sink table. Returns appended counts."""
-    os.makedirs(out_dir, exist_ok=True)
-    intr_path = os.path.join(out_dir, "intrusion_log")
-    sysd_path = os.path.join(out_dir, "systemd_log_messages")
-    n_intr = append_dedup(spark, intr_path, to_intrusion_log(dedup_intrusions(events)))
-    # persist so the count doesn't re-derive the projection (and re-parse,
-    # when the caller didn't persist upstream)
-    sysd = to_systemd_log_messages(systemd).persist()
-    try:
-        sysd.write.mode("append").parquet(sysd_path)
-        n_sysd = sysd.count()
-    finally:
-        sysd.unpersist()
-    return {"intrusion_log": n_intr, "systemd_log_messages": n_sysd}

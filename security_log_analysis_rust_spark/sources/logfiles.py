@@ -97,8 +97,9 @@ def parse_auth_glob(
 
 
 def read_journald_json(spark: SparkSession, path: str) -> DataFrame:
-    """S4: journald JSONL lines (kept raw; routing happens in
-    pipeline.parse.parse_journald_lines over a (url, line_no, line) frame).
+    """S4: journald JSONL lines (kept raw; routed by
+    ``streaming.journald_stream.route_journald``, the line router's
+    journald kinds, over the (url, warc_ts, line_no, line) frame).
 
     ``line_no`` is the DETERMINISTIC per-file line index (``wholetext`` +
     ``posexplode``), not ``monotonically_increasing_id()`` — mid values

@@ -6,10 +6,14 @@ relies on the DB unique key for exactly-once. Structured Streaming mapping:
 
 * source: file stream of JSONL drops (= the journald pipe; any append-only
   directory works, including object-store landing zones at scale);
-* transformations: the exact same batch routing functions — the parse stage
-  is pure DataFrame logic, so batch and streaming share one code path;
+* transformations: the batch line router, ``pipeline.parse.route_lines``
+  (pure DataFrame logic, so batch and streaming share one code path), of
+  which :func:`route_journald` keeps the journald kinds: a stream routes
+  journald records only, so a plain syslog or CLF line in the spool routes
+  nowhere;
 * sink: ``foreachBatch`` doing the idempotent anti-join append (the
-  ON CONFLICT analog), checkpointed, so restarts never double-insert;
+  ON CONFLICT analog) and the per-batch systemd write, checkpointed, so
+  restarts never double-insert;
 * watermark: event-time watermark on the journald timestamp bounds state for
   windowed aggregates (the reference has no event-time windows — strictly
   arrival order — so the watermark only demonstrates late-data handling).
@@ -18,19 +22,32 @@ relies on the DB unique key for exactly-once. Structured Streaming mapping:
 from __future__ import annotations
 
 import os
-from typing import Optional
+from typing import Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..pipeline.parse import parse_journald_lines
+from ..parsing.core import DEFAULT_SYSTEMD_LOG_FILTERS
+from ..pipeline.parse import JOURNALD_KINDS, route_lines
 from ..pipeline.route import (
     UNIQUE_KEY,
     append_dedup,
     dedup_intrusions,
     to_intrusion_log,
-    to_systemd_log_messages,
+    write_systemd,
 )
+
+
+def route_journald(
+    lines: DataFrame, filters: Sequence[str] = DEFAULT_SYSTEMD_LOG_FILTERS
+) -> Tuple[DataFrame, DataFrame]:
+    """journald lines -> (intrusion events, systemd messages): the rows of
+    :func:`route_lines` of :data:`JOURNALD_KINDS` and its ``systemd`` sink
+    (which only journald lines reach). Lines of the file kinds (``ssh``,
+    ``apache``) route nowhere here."""
+    out = route_lines(lines, filters)
+    intr = out["routed"].filter(F.col("kind").isin(*JOURNALD_KINDS))
+    return intr.select(*out["events"].columns), out["systemd"]
 
 
 def read_journald_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -74,7 +91,7 @@ def start_journald_ingest(
     lines = read_journald_stream(spark, input_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        intr, sysd = parse_journald_lines(batch_df, filters=filters)
+        intr, sysd = route_journald(batch_df, filters=filters)
         # daemon semantics: the server comes from config (src/config.rs),
         # not from the input file identity
         intr = intr.withColumn("server", F.lit(server)).persist()
@@ -92,9 +109,7 @@ def start_journald_ingest(
         )
         intr.unpersist()
         # per-batch overwrite subdir = idempotent replay on restart
-        to_systemd_log_messages(sysd).write.mode("overwrite").parquet(
-            os.path.join(sysd_path, f"batch={batch_id}")
-        )
+        write_systemd(sysd, os.path.join(sysd_path, f"batch={batch_id}"))
 
     writer = (
         lines.writeStream.foreachBatch(process_batch)
@@ -123,7 +138,7 @@ def stateful_attempt_totals(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     lines = read_journald_stream(spark, input_dir)
-    intr, _ = parse_journald_lines(lines)
+    intr, _ = route_journald(lines)
 
     def update(key, pdfs, state):
         total = state.get[0] if state.exists else 0
@@ -152,7 +167,7 @@ def windowed_intrusion_counts(
     """Event-time tumbling-window per-host counts with late-data watermark —
     the streaming generalization of the reference's per-day aggregates."""
     lines = read_journald_stream(spark, input_dir)
-    intr, _ = parse_journald_lines(lines)
+    intr, _ = route_journald(lines)
     return (
         intr.withWatermark("datetime", watermark)
         .groupBy(F.window("datetime", window).alias("win"), "host")

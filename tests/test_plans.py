@@ -1,9 +1,9 @@
 """Plan-quality and plan-equivalence tests.
 
-The fused single-pass parse must be row-identical to the definitional
-per-branch union, and the physical plans must show the properties the scale
-design depends on: column pruning at the scan, broadcast joins for
-enrichment, no extra shuffles in the narrow stage.
+The one Spark parse must be row-identical to the pure-Python oracle, and
+the physical plans must show the properties the scale design depends on:
+column pruning at the scan, broadcast joins for enrichment, no extra
+shuffles in the narrow stage.
 """
 
 from __future__ import annotations
@@ -18,10 +18,7 @@ from pyspark.sql import functions as F
 from conftest import TESTDATA_SF_SMALL
 
 from security_log_analysis_rust_spark.pipeline.enrich import enrich_events
-from security_log_analysis_rust_spark.pipeline.parse import (
-    extract_events,
-    extract_events_union,
-)
+from security_log_analysis_rust_spark.pipeline.parse import extract_events
 from security_log_analysis_rust_spark.synth import ensure_synthetic
 
 
@@ -36,16 +33,32 @@ def _pages(spark):
     return spark.read.parquet(ensure_synthetic(TESTDATA_SF_SMALL)["pages"])
 
 
-def test_fused_equals_union(spark):
+def test_router_matches_python_oracle(spark):
+    """The one Spark parse equals the pure-Python oracle (``parsing/core.py``
+    under the pipeline's routing precedence) on every page of sf0.001: the
+    same multiset of event and systemd rows, ``line_no`` included."""
+    from collections import Counter
+
+    from security_log_analysis_rust_spark.oracle import extract_events_pandas
+
     pages = _pages(spark)
-    cols = ["url", "line_no", "service", "server", "datetime", "host", "username"]
-    fused = {tuple(r) for r in extract_events(pages)["events"].select(*cols).collect()}
-    union = {tuple(r) for r in extract_events_union(pages)["events"].select(*cols).collect()}
-    assert fused == union
-    scols = ["url", "line_no", "log_level", "log_unit", "log_message", "log_timestamp"]
-    f_sys = {tuple(r) for r in extract_events(pages)["systemd"].select(*scols).collect()}
-    u_sys = {tuple(r) for r in extract_events_union(pages)["systemd"].select(*scols).collect()}
-    assert f_sys == u_sys
+    exp_ev, exp_sys = extract_events_pandas(
+        pages.select("url", "warc_ts", "text").toPandas()
+    )
+    out = extract_events(pages)
+
+    def rows(df, ts):
+        return Counter(
+            tuple(v.replace(tzinfo=None) if k == ts and v is not None else v
+                  for k, v in r.asDict().items())
+            for r in df.collect()
+        )
+
+    got_ev = rows(out["events"], "datetime")
+    got_sys = rows(out["systemd"], "log_timestamp")
+    assert sum(got_ev.values()) > 0 and sum(got_sys.values()) > 0
+    assert got_ev == Counter(exp_ev)
+    assert got_sys == Counter(exp_sys)
 
 
 def test_scan_prunes_html_column(spark):

@@ -110,6 +110,48 @@ def test_journald_line_no_is_deterministic(spark, tmp_path):
     assert mapping(df.repartition(3)) == expected
 
 
+def test_journald_spool_routes_only_journald_kinds(spark, tmp_path):
+    """A plain syslog ``sshd ... Invalid user`` line and a CLF line in a
+    journald spool route nowhere: the stream keeps the line router's
+    journald kinds, though the router itself accepts both lines as the
+    file kinds ``ssh`` and ``apache``. The journald lines beside them
+    still route."""
+    from security_log_analysis_rust_spark.pipeline.parse import route_lines
+    from security_log_analysis_rust_spark.sources.logfiles import read_journald_json
+    from security_log_analysis_rust_spark.streaming.journald_stream import (
+        route_journald,
+    )
+
+    indir = tmp_path / "in"
+    indir.mkdir()
+    base_us = 1_704_067_200_000_000
+    _write_journald_file(
+        indir / "a.json",
+        [
+            {"__REALTIME_TIMESTAMP": str(base_us),
+             "MESSAGE": "Invalid user eve from 1.2.3.4 port 22", "UNIT": "ssh.service"},
+            {"__REALTIME_TIMESTAMP": str(base_us + 1),
+             "MESSAGE": "2024/01/01 nginx: 9.8.7.6 - - GET / 404", "UNIT": "nginx.service"},
+            {"__REALTIME_TIMESTAMP": str(base_us + 2),
+             "MESSAGE": "ERROR: something broke", "UNIT": "app.service"},
+        ],
+    )
+    clf = '5.6.7.8 - - [12/Jun/2022:10:00:00 +0000] "GET / HTTP/1.1" 200 512'
+    with open(indir / "a.json", "a") as f:
+        f.write(SSH_LINE + clf + "\n")
+
+    lines = read_journald_json(spark, str(indir))
+    assert lines.count() == 5
+    kinds = sorted(r.kind for r in route_lines(lines)["routed"].collect())
+    assert kinds == ["apache", "jnginx", "jssh", "ssh", "systemd"]
+
+    intr, sysd = route_journald(lines)
+    assert sorted((r.service, r.host) for r in intr.collect()) == [
+        ("nginx", "9.8.7.6"), ("ssh", "1.2.3.4")
+    ]
+    assert [r.log_level for r in sysd.collect()] == ["error"]
+
+
 def test_streaming_journald_ingest(spark, tmp_path):
     from security_log_analysis_rust_spark.streaming.journald_stream import (
         start_journald_ingest,
@@ -214,14 +256,14 @@ def test_stateful_attempt_totals_accumulate_across_batches(spark, tmp_path):
     # the SAME spool input, computed with the batch window expression.
     from pyspark.sql import Window
 
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        parse_journald_lines,
-    )
     from security_log_analysis_rust_spark.sources.logfiles import (
         read_journald_json,
     )
+    from security_log_analysis_rust_spark.streaming.journald_stream import (
+        route_journald,
+    )
 
-    intr, _ = parse_journald_lines(read_journald_json(spark, str(indir)))
+    intr, _ = route_journald(read_journald_json(spark, str(indir)))
     w = (
         Window.partitionBy("host")
         .orderBy("datetime")
@@ -298,13 +340,15 @@ def _fake_journalctl(tmp_path, n_lines: int, sleep: float = 0.0) -> str:
 def test_journalctl_spool_feeds_existing_reader(spark, tmp_path):
     """The subprocess adapter (parse_logs.rs:262-269): `journalctl -o json`
     output spools into files and flows through read_journald_json +
-    parse_journald_lines unchanged."""
-    from security_log_analysis_rust_spark.pipeline.parse import parse_journald_lines
+    route_journald unchanged."""
     from security_log_analysis_rust_spark.sources.journalctl import (
         journalctl_command,
         spool_journalctl,
     )
     from security_log_analysis_rust_spark.sources.logfiles import read_journald_json
+    from security_log_analysis_rust_spark.streaming.journald_stream import (
+        route_journald,
+    )
 
     assert journalctl_command(units=["ssh"], since="yesterday", follow=True) == [
         "journalctl", "-o", "json", "-u", "ssh", "--since", "yesterday", "-f"
@@ -318,7 +362,7 @@ def test_journalctl_spool_feeds_existing_reader(spark, tmp_path):
 
     df = read_journald_json(spark, str(spool))
     assert df.count() == 25
-    events, _sysd = parse_journald_lines(df)
+    events, _sysd = route_journald(df)
     assert events.count() == 25
 
     # ADVICE r3: daemon restart into the SAME spool dir must not overwrite

@@ -70,11 +70,13 @@ def test_spark_journald_routing_matches_oracle_on_reference_fixture(spark):
     the reference's own journald fixture, row-compared against the
     pure-Python oracle — the independent anchor on non-synthetic data."""
     from security_log_analysis_rust_spark.parsing.core import parse_journald_line
-    from security_log_analysis_rust_spark.pipeline.parse import parse_journald_lines
     from security_log_analysis_rust_spark.sources.logfiles import read_journald_json
+    from security_log_analysis_rust_spark.streaming.journald_stream import (
+        route_journald,
+    )
 
     lines = read_journald_json(spark, REFERENCE_SYSTEMD_JSON)
-    intr, sysd = parse_journald_lines(lines)
+    intr, sysd = route_journald(lines)
     got_intr = sorted(
         (r.service, r.host, r.username, r.datetime.replace(tzinfo=None))
         for r in intr.collect()
@@ -133,14 +135,10 @@ def test_udf_all_null_batch(spark):
 
 def test_extract_events_without_filters_keeps_every_journald_line(spark):
     """filters=() blacklists nothing: a line the default filters drop is
-    routed like any other, in both the fused and the per-branch parse."""
+    routed like any other."""
     from datetime import datetime
 
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        extract_events,
-        pages_to_lines,
-        parse_journald_lines,
-    )
+    from security_log_analysis_rust_spark.pipeline.parse import extract_events
 
     lines = [
         '{"__REALTIME_TIMESTAMP":"1655046591494032","MESSAGE":"disk error",'
@@ -154,22 +152,18 @@ def test_extract_events_without_filters_keeps_every_journald_line(spark):
     )
     assert extract_events(pages)["systemd"].count() == 1  # default filters
     assert extract_events(pages, filters=())["systemd"].count() == 2
-    assert parse_journald_lines(pages_to_lines(pages), filters=())[1].count() == 2
 
 
 def test_apache_host_truncated_by_bytes_like_core(spark):
     """CLF hosts are cut to 60 BYTES, as ``core.parse_log_line_apache``
     specifies: 30 two-byte characters fill the limit, so ``.com`` is cut
     off and the line drops (it was emitted under a 60-character cut); a cut
-    through a multi-byte character drops the line too (core raises). Both
-    parse paths agree with core."""
+    through a multi-byte character drops the line too (core raises). The
+    parse agrees with core."""
     from datetime import datetime
 
     from security_log_analysis_rust_spark.parsing.core import parse_log_line_apache
-    from security_log_analysis_rust_spark.pipeline.parse import (
-        extract_events,
-        extract_events_union,
-    )
+    from security_log_analysis_rust_spark.pipeline.parse import extract_events
 
     rest = ' - - [12/Jun/2022:10:00:00 +0000] "GET / HTTP/1.1" 200 512'
     hosts = ["é" * 30 + ".com", "e" * 30 + ".com", "a" + "é" * 30 + ".com",
@@ -189,6 +183,5 @@ def test_apache_host_truncated_by_bytes_like_core(spark):
         [("https://example.org/access", datetime(2022, 6, 12), "\n".join(lines))],
         "url string, warc_ts timestamp, text string",
     )
-    for parse in (extract_events, extract_events_union):
-        got = sorted(r.host for r in parse(pages)["events"].collect())
-        assert got == expected, parse.__name__
+    got = sorted(r.host for r in extract_events(pages)["events"].collect())
+    assert got == expected
