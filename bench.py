@@ -399,9 +399,7 @@ def run_scaling_level(
     from security_log_analysis_rust_spark.pipeline.parse import extract_events
     from security_log_analysis_rust_spark.pipeline.route import (
         append_dedup,
-        dedup_intrusions,
         read_sink,
-        to_intrusion_log,
         write_systemd,
     )
     from security_log_analysis_rust_spark.schemas import INTRUSION_LOG_SCHEMA
@@ -424,11 +422,7 @@ def run_scaling_level(
             parsed = extract_events(pages, persist=True)
             try:
                 intr_path = os.path.join(out, "intrusion_log")
-                n_intr = append_dedup(
-                    spark,
-                    intr_path,
-                    to_intrusion_log(dedup_intrusions(parsed["events"])),
-                )
+                n_intr = append_dedup(spark, intr_path, parsed["events"])
                 n_sys = write_systemd(
                     parsed["systemd"],
                     os.path.join(out, "systemd_log_messages", "split=0"),

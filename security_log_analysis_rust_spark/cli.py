@@ -190,29 +190,23 @@ def _dispatch(spark, args) -> int:
     if args.cmd == "import":
         # --table per src/parse_opts.rs:232-260: intrusion_log -> ON CONFLICT
         # DO NOTHING analog; host_country -> per-row upsert (models.rs:110-124)
-        import os
-
-        from .pipeline.route import UNIQUE_KEY, append_dedup
-        from .sources.logfiles import import_json
-
         if args.table == "host_country":
-            from .pipeline.dims import overwrite_dim, read_dim, upsert_host_country
+            from .pipeline.dims import merge_host_country
             from .schemas import HOST_COUNTRY_SCHEMA
 
-            dim_path = os.path.join(args.sink, "host_country.parquet")
             updates = spark.read.schema(HOST_COUNTRY_SCHEMA).json(args.path)
-            existing = read_dim(spark, args.sink, "host_country")
-            merged = upsert_host_country(existing, updates).persist()
-            n_new = merged.count() - existing.count()
-            overwrite_dim(merged, dim_path)
-            merged.unpersist()
-            print(json.dumps({"appended": n_new, "table": args.table}))
-            return 0
-        rows = import_json(spark, args.path)
-        # within-batch duplicates on the unique key must collapse too — the
-        # reference's sequential INSERT ... ON CONFLICT does this implicitly
-        rows = rows.dropDuplicates(UNIQUE_KEY)
-        n = append_dedup(spark, os.path.join(args.sink, "intrusion_log"), rows)
+            n = merge_host_country(spark, args.sink, updates)
+        else:
+            import os
+
+            from .pipeline.route import append_dedup
+            from .sources.logfiles import import_json
+
+            # append_dedup also collapses within-batch duplicates on the
+            # unique key, as the reference's sequential INSERT ... ON
+            # CONFLICT does implicitly, and ids rows that carry none
+            rows = import_json(spark, args.path)
+            n = append_dedup(spark, os.path.join(args.sink, "intrusion_log"), rows)
         print(json.dumps({"appended": n, "table": args.table}))
         return 0
 

@@ -18,8 +18,13 @@ Routes (reference ``get_path``, security_log_http.rs:589-605):
   offset&limit]`` — paginated systemd messages (``:520-565``).
 * ``DELETE /security_log/log_messages/{id}`` (``:567-586``).
 * ``GET /security_log/cleanup`` — resolve dangling hosts through the
-  configured resolver and upsert the dim (``host_country_cleanup``,
-  ``:440-461``).
+  configured resolver, once each, and upsert the dim
+  (``host_country_cleanup``, ``:440-461``).
+* ``POST /security_log/intrusion_log`` and ``POST /security_log/host_country``
+  (``:313-328``, ``:410-428``).
+
+The mutating routes and the CLI's ``import`` hand their rows to each
+table's one writer: ``route.append_dedup`` or ``dims.merge_host_country``.
 
 Fixed Spark job costs, not data, set these requests' latency, so each read
 runs as few jobs as it can:
@@ -143,8 +148,8 @@ class SecurityLogApp:
         self.cache = TimedSizedCache(100, 3600.0)
         self.cache_all = TimedSizedCache(100, 3600.0)
         self.compute_calls = 0
-        # Mutating endpoints rewrite live sink/dim directories with
-        # rmtree + os.replace; a concurrent read mid-swap would see vanished
+        # Mutating endpoints rewrite live sink/dim directories with a
+        # rename-aside swap; a concurrent read mid-swap would see vanished
         # parquet files and two writers would clobber each other's .tmp.
         # The stdlib layer is a thin adapter, so requests are serialized
         # wholesale (single-flight) rather than building a reader/writer
@@ -270,14 +275,13 @@ class SecurityLogApp:
 
     def intrusion_log_post(self, updates: list) -> int:
         """intrusion_log_post (security_log_http.rs:313-328): dedup-insert a
-        batch of rows; returns the number actually appended."""
-        from .pipeline.route import UNIQUE_KEY, append_dedup
-        from .schemas import INTRUSION_LOG_SCHEMA
-        import uuid
+        batch of rows through ``route.append_dedup``; returns the number
+        actually appended."""
+        from .pipeline.route import append_dedup
 
         rows = [
             (
-                u.get("id") or str(uuid.uuid4()),
+                u.get("id"),
                 u["service"],
                 u["server"],
                 u["datetime"].replace("T", " ").replace("Z", ""),
@@ -290,12 +294,8 @@ class SecurityLogApp:
             rows, "id string, service string, server string, datetime string, "
             "host string, username string"
         ).withColumn("datetime", F.col("datetime").cast("timestamp"))
-        df = df.select(*[f.name for f in INTRUSION_LOG_SCHEMA.fields])
-        df = df.dropDuplicates(UNIQUE_KEY)
         return append_dedup(
-            self.spark,
-            os.path.join(self.sink_dir, "intrusion_log"),
-            df,
+            self.spark, os.path.join(self.sink_dir, "intrusion_log"), df
         )
 
     def host_country_get(self, offset: int = 0, limit: int = 10) -> dict:
@@ -308,24 +308,14 @@ class SecurityLogApp:
 
     def host_country_post(self, entries: list) -> int:
         """host_country_post (security_log_http.rs:410-428 post): per-row
-        upsert; returns the number of NEW hosts (the reference's counter
-        actually counts updates — models.rs:110-124 returns the pre-existing
-        row — documented deviation: new-host count is the useful number)."""
-        from .pipeline.dims import overwrite_dim, upsert_host_country
+        upsert through ``dims.merge_host_country``; returns the number of
+        NEW hosts."""
+        from .pipeline.dims import merge_host_country
         from .schemas import HOST_COUNTRY_SCHEMA
 
-        hc, _ = self._dims()
-        rows = [
-            (e["host"], e["code"], e.get("ipaddr"), None) for e in entries
-        ]
+        rows = [(e["host"], e["code"], e.get("ipaddr"), None) for e in entries]
         updates = self.spark.createDataFrame(rows, HOST_COUNTRY_SCHEMA)
-        merged = upsert_host_country(hc, updates).persist()
-        n_new = merged.count() - hc.count()
-        overwrite_dim(
-            merged, os.path.join(self.dims_dir, "host_country.parquet")
-        )
-        merged.unpersist()
-        return n_new
+        return merge_host_country(self.spark, self.dims_dir, updates)
 
     def log_messages(
         self,
@@ -416,27 +406,26 @@ class SecurityLogApp:
 
     def cleanup(self) -> list:
         """host_country_cleanup (security_log_http.rs:440-461): resolve
-        dangling hosts, upsert the dim, return the new rows."""
-        from .pipeline.dims import enrich_new_hosts
+        dangling hosts, upsert the dim, return the new rows. Each dangling
+        host is resolved once: the response is collected from the resolver's
+        output, and that collected result is what ``dims.merge_host_country``
+        writes."""
+        from .pipeline.dims import merge_host_country, resolve_hosts
         from .pipeline.enrich import dangling_hosts
+        from .schemas import HOST_COUNTRY_SCHEMA
 
         hc, _ = self._dims()
-        intr = self._intrusions()
-        missing = {r.host for r in dangling_hosts(intr, hc).collect()}
-        merged = enrich_new_hosts(intr, hc, resolver=self.resolver)
-        new_rows = [
-            r.asDict()
-            for r in merged.filter(F.col("host").isin(list(missing))).collect()
-        ] if missing else []
-        if not new_rows:  # nothing resolved (e.g. no live whois): no rewrite
+        resolved = resolve_hosts(
+            dangling_hosts(self._intrusions(), hc), self.resolver
+        ).collect()
+        if not resolved:  # nothing resolved (e.g. no live whois): no rewrite
             return []
-        from .pipeline.dims import overwrite_dim
-
-        overwrite_dim(merged, os.path.join(self.dims_dir, "host_country.parquet"))
-        for d in new_rows:
-            if d.get("created_at") is not None:
-                d["created_at"] = d["created_at"].isoformat()
-        return new_rows
+        merge_host_country(
+            self.spark,
+            self.dims_dir,
+            self.spark.createDataFrame(resolved, HOST_COUNTRY_SCHEMA),
+        )
+        return [r.asDict() for r in resolved]
 
 
 def _page_body(page, offset: int, limit: int, ts_cols) -> dict:

@@ -36,15 +36,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import INTRUSION_LOG_SCHEMA
 from .parse import extract_events
-from .route import (
-    UNIQUE_KEY,
-    append_dedup,
-    dedup_intrusions,
-    read_sink,
-    read_systemd_sink,
-    to_intrusion_log,
-    write_systemd,
-)
+from .route import append_dedup, read_sink, read_systemd_sink, write_systemd
 
 
 @dataclass
@@ -69,10 +61,6 @@ def _split_id(files: List[str]) -> str:
 
 def _manifest_path(manifest_dir: str, split_id: str) -> str:
     return os.path.join(manifest_dir, f"{split_id}.json")
-
-
-def completed_splits(manifest_dir: str) -> set:
-    return {m["split_id"] for m in _read_manifests(manifest_dir)}
 
 
 def fold_watermarks(manifests: List[dict]) -> dict:
@@ -192,7 +180,7 @@ def run_incremental(
         pages = spark.read.parquet(*files)
         # one materialized parse feeds both sinks (no re-scan per sink)
         out = extract_events(pages, persist=True, filters=filters)
-        events = dedup_intrusions(out["events"])
+        events = out["events"]
 
         if watermark and wm_state:
             # F5: per-(service,server) high watermark — a tiny keyed dim
@@ -216,7 +204,12 @@ def run_incremental(
         # ONE agg over the already-persisted parse yields both lineage
         # stats: the split's min(datetime) (bounds the anti-join's sink scan
         # via month-partition pruning) and the per-(service,server) max
-        # (the watermark contribution recorded in the manifest)
+        # (the watermark contribution recorded in the manifest). It reads
+        # the rows before append_dedup's in-batch dedup: datetime is in the
+        # unique key, so the dedup keeps every (service, server, datetime)
+        # and the min/max are the same without its shuffle. The watermark
+        # filter above keeps or drops whole key groups, so it commutes with
+        # the dedup.
         key_stats = events.groupBy("service", "server").agg(
             F.min("datetime").alias("mn"), F.max("datetime").alias("mx")
         ).collect()
@@ -230,10 +223,7 @@ def run_incremental(
                 )
 
         try:
-            n_intr = append_dedup(
-                spark, intr_path, to_intrusion_log(events), key=UNIQUE_KEY,
-                since=since,
-            )
+            n_intr = append_dedup(spark, intr_path, events, since=since)
             # per-split overwrite => idempotent re-run without a unique key
             n_sysd = write_systemd(
                 out["systemd"], os.path.join(sysd_path, f"split={sid}")
@@ -255,11 +245,7 @@ def run_incremental(
             json.dump(manifest, f)
         os.replace(tmp, _manifest_path(manifest_dir, sid))  # atomic commit
         # fold this split's contribution into the in-memory watermark state
-        for service, servers in split_wm.items():
-            cur = wm_state.setdefault(service, {})
-            for server, iso in servers.items():
-                if server not in cur or iso > cur[server]:
-                    cur[server] = iso
+        wm_state = fold_watermarks([{"watermarks": wm_state}, manifest])
         report.splits_completed += 1
         for k, v in manifest["rows"].items():
             report.rows[k] = report.rows.get(k, 0) + v
@@ -280,13 +266,8 @@ def read_sinks(spark: SparkSession, sink_dir: str):
 
 def metrics(sink_dir: str) -> dict:
     """Aggregate lineage metrics from committed manifests."""
-    manifest_dir = os.path.join(sink_dir, "_manifests")
     out = {"splits": 0, "intrusion_appended": 0, "systemd": 0, "total_sec": 0.0}
-    for p in glob.glob(os.path.join(manifest_dir, "*.json")):
-        with open(p) as f:
-            m = json.load(f)
-        if m.get("status") != "completed":
-            continue
+    for m in _read_manifests(os.path.join(sink_dir, "_manifests")):
         out["splits"] += 1
         out["intrusion_appended"] += m["rows"]["intrusion_appended"]
         out["systemd"] += m["rows"]["systemd"]

@@ -1,13 +1,18 @@
 """Dimension-table maintenance: host_country upsert + whois classifier.
 
-* ``upsert_host_country`` = K3 (``src/models.rs:110-162``): insert-if-new /
-  update-if-existing, keyed on host. (The reference's UPDATE is missing its
-  WHERE clause — a known bug, SURVEY.md §7.4.4; this implements the intended
-  keyed upsert, i.e. Iceberg ``MERGE INTO host_country USING updates ON
-  host``.)
-* ``enrich_new_hosts`` = J5 cache-through (``src/host_country_metadata.rs:
-  49-101``): dangling hosts get codes from a resolver function and are
-  appended to the dim — the whois/DNS network call replaced by a
+* ``merge_host_country`` = K3 (``src/models.rs:110-162``), the one
+  ``host_country`` writer, used by ``import --table host_country``,
+  ``POST /host_country`` and ``/cleanup``: it reads the dim, upserts
+  (``upsert_host_country``: insert-if-new / update-if-existing, keyed on
+  host) and puts the result in with ``overwrite_dim``. (The reference's
+  UPDATE is missing its WHERE clause — a known bug, SURVEY.md §7.4.4; this
+  implements the intended keyed upsert, i.e. Iceberg ``MERGE INTO
+  host_country USING updates ON host``.)
+* ``overwrite_dim`` swaps the new table in with ``route.swap_dir``, which
+  ``read_dim`` repairs if cut short: a crash leaves the old dim or the new.
+* ``resolve_hosts`` / ``enrich_new_hosts`` = J5 cache-through
+  (``src/host_country_metadata.rs:49-101``): dangling hosts get codes from a
+  resolver function — the whois/DNS network call replaced by a
   deterministic resolver.
 * ``classify_whois_line`` = P8 (``src/host_country_metadata.rs:219-241``):
   the whois output line classifier, preserved as a tested pure function.
@@ -22,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..schemas import COUNTRY_CODE_SCHEMA, HOST_COUNTRY_SCHEMA
+from .route import recover_sink, swap_dir
 
 _DIM_SCHEMAS = {"host_country": HOST_COUNTRY_SCHEMA, "country_code": COUNTRY_CODE_SCHEMA}
 
@@ -29,10 +35,12 @@ _DIM_SCHEMAS = {"host_country": HOST_COUNTRY_SCHEMA, "country_code": COUNTRY_COD
 def read_dim(spark: SparkSession, dims_dir: str, name: str) -> DataFrame:
     """Dim ``name`` (``host_country`` or ``country_code``) from
     ``<dims_dir>/<name>.parquet``, read with its declared schema, so the
-    read runs no schema-inference job."""
-    return spark.read.schema(_DIM_SCHEMAS[name]).parquet(
-        os.path.join(dims_dir, f"{name}.parquet")
-    )
+    read runs no schema-inference job. Runs ``recover_sink`` first, as
+    ``route.read_sink`` does: a crash inside :func:`overwrite_dim`'s swap
+    leaves the old dim aside, and this puts it back."""
+    path = os.path.join(dims_dir, f"{name}.parquet")
+    recover_sink(path)
+    return spark.read.schema(_DIM_SCHEMAS[name]).parquet(path)
 
 
 def read_dims(spark: SparkSession, dims_dir: str) -> Tuple[DataFrame, DataFrame]:
@@ -42,18 +50,29 @@ def read_dims(spark: SparkSession, dims_dir: str) -> Tuple[DataFrame, DataFrame]
 
 
 def overwrite_dim(df: DataFrame, path: str) -> None:
-    """Atomically replace a dim table at ``path`` (file OR directory) with
-    ``df``: write to a sibling tmp dir first (the source may be ``path``
-    itself), then swap. The Iceberg table-commit analog for plain parquet."""
-    import shutil
-
+    """Replace the dim table at ``path`` (a file or a directory) with ``df``:
+    write a sibling ``.tmp`` dir first (the source may be ``path`` itself),
+    then swap it in with ``route.swap_dir``. The Iceberg table-commit
+    analog for plain parquet."""
     tmp = path + ".tmp"
     df.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(path):
-        shutil.rmtree(path)
-    elif os.path.exists(path):
-        os.remove(path)
-    os.replace(tmp, path)
+    swap_dir(path, tmp)
+
+
+def merge_host_country(spark: SparkSession, dims_dir: str, updates: DataFrame) -> int:
+    """The one ``host_country`` writer: upsert ``updates`` (rows of
+    ``HOST_COUNTRY_SCHEMA``) into ``<dims_dir>/host_country.parquet`` and
+    return the number of NEW hosts (the reference's counter actually counts
+    updates — models.rs:110-124 returns the pre-existing row — documented
+    deviation: the new-host count is the useful number)."""
+    existing = read_dim(spark, dims_dir, "host_country")
+    merged = upsert_host_country(existing, updates).persist()
+    try:
+        n_new = merged.count() - existing.count()
+        overwrite_dim(merged, os.path.join(dims_dir, "host_country.parquet"))
+    finally:
+        merged.unpersist()
+    return n_new
 
 
 def upsert_host_country(existing: DataFrame, updates: DataFrame) -> DataFrame:
@@ -69,28 +88,23 @@ def upsert_host_country(existing: DataFrame, updates: DataFrame) -> DataFrame:
     )
 
 
-def enrich_new_hosts(
-    events: DataFrame,
-    host_country: DataFrame,
-    resolver: Callable[[str], Optional[str]],
+def resolve_hosts(
+    hosts: DataFrame, resolver: Optional[Callable[[str], Optional[str]]]
 ) -> DataFrame:
-    """Cache-through enrichment: resolve hosts missing from the dim and
-    return the upserted dim (``src/host_country_metadata.rs:49-101``).
+    """``hosts`` (a ``host`` column) -> ``host_country`` rows coded by
+    ``resolver``.
 
-    The resolver runs DISTRIBUTED via ``mapInPandas`` over the dangling-host
-    DataFrame — the dangling set is unbounded at scale, so it is never
-    collected to the driver (the reference's per-miss whois loop becomes a
-    per-partition loop inside each Arrow batch). Hosts the resolver can't
-    classify (None) are skipped, like the reference's failed whois lookups.
+    The resolver runs DISTRIBUTED via ``mapInPandas`` — the dangling set is
+    unbounded at scale, so it is never collected to the driver (the
+    reference's per-miss whois loop becomes a per-partition loop inside each
+    Arrow batch), once per host per action on the result. Hosts the resolver
+    can't classify (None) are skipped, like the reference's failed whois
+    lookups; with no resolver (no live whois) every host is skipped.
     """
     import pandas as pd
 
-    from .enrich import dangling_hosts
-
-    if resolver is None:  # no live whois: skip every host (upsert nothing)
+    if resolver is None:
         resolver = lambda h: None  # noqa: E731
-
-    missing = dangling_hosts(events, host_country)
 
     def gen(batches):
         for pdf in batches:
@@ -98,12 +112,25 @@ def enrich_new_hosts(
             out = pd.DataFrame({"host": pdf["host"], "code": codes})
             yield out[out["code"].notna()]
 
-    updates = missing.mapInPandas(gen, "host string, code string").select(
+    return hosts.mapInPandas(gen, "host string, code string").select(
         "host",
         "code",
         F.lit(None).cast("string").alias("ipaddr"),
         F.lit(None).cast("timestamp").alias("created_at"),
     )
+
+
+def enrich_new_hosts(
+    events: DataFrame,
+    host_country: DataFrame,
+    resolver: Callable[[str], Optional[str]],
+) -> DataFrame:
+    """Cache-through enrichment: resolve hosts missing from the dim
+    (:func:`resolve_hosts`) and return the upserted dim
+    (``src/host_country_metadata.rs:49-101``)."""
+    from .enrich import dangling_hosts
+
+    updates = resolve_hosts(dangling_hosts(events, host_country), resolver)
     return upsert_host_country(host_country, updates)
 
 

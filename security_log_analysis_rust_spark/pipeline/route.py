@@ -5,20 +5,21 @@ The reference routes parsed rows into Postgres tables with
 ``(service, server, datetime, host)`` (``migrations/V03__intrusion_log.sql:10``,
 ``src/models.rs:429-448``) after a sort + adjacent-dedup pass
 (``src/parse_logs.rs:198-202``). Spark has no unique constraints, so the same
-exactly-once semantics are built from:
+exactly-once semantics are built from one writer per sink:
 
-* ``dedup_intrusions`` — deterministic keep-first over the unique key
-  (``min_by`` per key; the reference's keep-first is insert-order
-  dependent, ours is ordered by (username NULLS FIRST, url, line_no) and
-  therefore reproducible — SURVEY.md §7.4.3);
-* ``append_dedup`` — anti-join against the existing sink before an append,
-  replacing ON CONFLICT DO NOTHING (O8 -> K1). The anti-join, the row count
-  and the write are one action: the count is a ``DataFrame.observe`` on the
-  write itself.
-
-The systemd sink needs no dedup (the reference's table has no unique key):
-:func:`write_systemd` overwrites one directory per ingest split
-(``split=<id>``) or stream batch (``batch=<id>``).
+* :func:`append_dedup` is the one intrusion-sink writer (O8 -> K1). Every
+  caller (ingest split, stream batch, ``import``, ``POST /intrusion_log``)
+  passes raw rows and gets back the appended count. It keeps one row per
+  unique key with :func:`dedup_intrusions` — deterministic keep-first,
+  ordered by (username NULLS FIRST, url, line_no, id), where the
+  reference's keep-first is insert-order dependent (SURVEY.md §7.4.3) —
+  gives each row without an id a uuid (:func:`to_intrusion_log`), then
+  anti-joins against the sink, replacing ON CONFLICT DO NOTHING. The
+  anti-join, the row count and the write are one action: the count is a
+  ``DataFrame.observe`` on the write itself.
+* :func:`write_systemd` is the one systemd-sink writer. That table has no
+  unique key, so it needs no dedup: it overwrites one directory per ingest
+  split (``split=<id>``) or stream batch (``batch=<id>``).
 
 Layout: the intrusion sink is partitioned by month(datetime)
 (:data:`MONTH_COL`), and every writer goes through :func:`_write_months`,
@@ -28,6 +29,11 @@ month it touches (more only for a month past AQE's advisory partition size)
 per month (``src/polars_analysis.rs:145-146``). ``compact_intrusion_log``
 rewrites each month directory holding several files (one per append) back
 into that layout.
+
+Every rewrite in place — a sink month, a legacy sink's migration, a dim
+table (``dims.overwrite_dim``) — is staged beside the live copy and put in
+by the one rename-aside :func:`swap_dir`; :func:`recover_sink`, run by every
+read and write of a sink or dim, repairs a swap cut short.
 
 Every read of either sink declares its schema from ``schemas.py``
 (:func:`_read_stored`, :func:`read_systemd_sink`), so no read starts
@@ -65,14 +71,15 @@ def dedup_intrusions(events: DataFrame) -> DataFrame:
     event — the window variant's sort was the pipeline's worst-scaling
     stage (1.7x from 8->32 cores vs 5x for the parse).
 
-    Order = (username ASC NULLS FIRST, url, line_no): deterministic
-    keep-first; NULL is encoded below '' so the winner is reproducible.
+    Order = (username ASC NULLS FIRST, url, line_no, id), each tie-break
+    used when ``events`` has the column: deterministic keep-first; NULL is
+    encoded below '' so the winner is reproducible.
     """
     ord_fields = [
         F.col("username").isNotNull().cast("int"),  # NULL (0) sorts first
         F.coalesce(F.col("username"), F.lit("")),
     ]
-    for c in ("url", "line_no"):
+    for c in ("url", "line_no", "id"):
         if c in events.columns:
             ord_fields.append(F.col(c))
     payload = F.struct(*[F.col(c) for c in events.columns])
@@ -83,10 +90,12 @@ def dedup_intrusions(events: DataFrame) -> DataFrame:
 
 
 def to_intrusion_log(deduped: DataFrame) -> DataFrame:
-    """Attach the random uuid4 id (``src/parse_logs.rs:46``; excluded from
-    all equality checks) and project the sink schema."""
+    """:func:`append_dedup`'s projection to the sink schema. A row keeps the
+    ``id`` it carries; a row without one gets a random uuid4
+    (``src/parse_logs.rs:46``; ids are excluded from all equality checks)."""
+    uuid = F.expr("uuid()")
     return deduped.select(
-        F.expr("uuid()").alias("id"),
+        (F.coalesce("id", uuid) if "id" in deduped.columns else uuid).alias("id"),
         "service",
         "server",
         "datetime",
@@ -127,7 +136,7 @@ def read_sink(
     :data:`MONTH_COL`, so the scan skips the older month directories.
 
     Runs :func:`recover_sink` first: a crash between the two renames of
-    :func:`_swap_dir` leaves the live dir absent with its ``_old.`` aside
+    :func:`swap_dir` leaves the live dir absent with its ``_old.`` aside
     holding the data — without this, a pure read path would see "no sink"
     until some write-path entry point happened to repair it."""
     recover_sink(path)
@@ -207,8 +216,17 @@ def _write_months(df: DataFrame, path: str, mode: str) -> int:
     return seen.get["n"]
 
 
-def _swap_dir(live: str, tmp: str) -> None:
-    """Replace directory ``live`` with ``tmp`` via rename-aside.
+def _remove(path: str) -> None:
+    """Delete ``path``, a directory or a single file."""
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    else:
+        os.remove(path)
+
+
+def swap_dir(live: str, tmp: str) -> None:
+    """Replace ``live`` (a directory, or a single parquet file such as a
+    synthetic dim) with the directory ``tmp`` via rename-aside.
 
     Order matters for crash safety: the live copy is renamed aside (never
     deleted while it is the only copy), the new dir moved in, and only then
@@ -220,10 +238,10 @@ def _swap_dir(live: str, tmp: str) -> None:
     parent, name = os.path.split(os.path.normpath(live))
     aside = os.path.join(parent, "_old." + name)
     if os.path.exists(aside):  # leftover from a crashed *completed* swap
-        shutil.rmtree(aside)
+        _remove(aside)
     os.rename(live, aside)
     os.rename(tmp, live)
-    shutil.rmtree(aside)
+    _remove(aside)
 
 
 def _rewrite_month(sink_path: str, month: str, rows: DataFrame) -> None:
@@ -231,21 +249,21 @@ def _rewrite_month(sink_path: str, month: str, rows: DataFrame) -> None:
     carrying :data:`MONTH_COL`) in the clustered layout.
 
     The rows are staged under ``.tmp.dt_month=<month>`` (dot prefix =
-    invisible to Spark's listing) and swapped in by :func:`_swap_dir`; a
+    invisible to Spark's listing) and swapped in by :func:`swap_dir`; a
     crash leaves the old month or the new one, and :func:`recover_sink`
     removes the staging dir."""
     stage = os.path.join(sink_path, f".tmp.{MONTH_COL}={month}")
     part = f"{MONTH_COL}={month}"
     _write_months(rows, stage, "overwrite")
-    _swap_dir(os.path.join(sink_path, part), os.path.join(stage, part))
+    swap_dir(os.path.join(sink_path, part), os.path.join(stage, part))
     shutil.rmtree(stage)
 
 
 def recover_sink(sink_path: str) -> None:
-    """Repair leftovers of a crashed :func:`_swap_dir` / migration.
+    """Repair leftovers of a crashed :func:`swap_dir` / migration.
 
-    Invariants restored: if the live dir (sink root or a month partition)
-    is missing but its ``_old.`` aside exists, the aside IS the pre-swap
+    Invariants restored: if the live path (sink root, month partition or
+    dim table) is missing but its ``_old.`` aside exists, the aside IS the pre-swap
     data — rename it back. If both exist, the swap completed — drop the
     aside. A ``.tmp`` with no live sink and no aside means a legacy
     (pre-rename-aside) crash stranded the whole history in the tmp: fail
@@ -256,7 +274,7 @@ def recover_sink(sink_path: str) -> None:
     tmp = sink_path + ".tmp"
     if os.path.exists(aside):
         if os.path.exists(sink_path):
-            shutil.rmtree(aside)
+            _remove(aside)
         else:
             os.rename(aside, sink_path)
     if os.path.exists(tmp):
@@ -309,40 +327,44 @@ def _migrate_unpartitioned_sink(spark: SparkSession, sink_path: str) -> bool:
         flat = flat.unionByName(part)
     tmp = sink_path + ".tmp"
     _write_months(flat, tmp, "overwrite")
-    _swap_dir(sink_path, tmp)
+    swap_dir(sink_path, tmp)
     return True
 
 
 def append_dedup(
     spark: SparkSession,
     sink_path: str,
-    new_rows: DataFrame,
-    key=UNIQUE_KEY,
+    rows: DataFrame,
     since: Optional[str] = None,
 ) -> int:
-    """ON CONFLICT DO NOTHING analog: drop rows whose key already exists in
-    the sink, then append. Returns the number of appended rows.
+    """The one intrusion-sink writer, the ON CONFLICT DO NOTHING analog:
+    ``rows`` (which may repeat a unique key, and may carry ``id``, ``url``
+    and ``line_no``) are deduplicated by :func:`dedup_intrusions`, given an
+    id where they have none and projected by :func:`to_intrusion_log`; rows
+    whose key already exists in the sink are dropped and the rest appended.
+    Returns the number of appended rows.
 
     The sink is written partitioned by month(datetime) (:data:`MONTH_COL`),
-    so the ``since`` bound (ISO timestamp; callers pass the split's
+    so the ``since`` bound (ISO timestamp; callers pass the batch's
     min(datetime)) prunes the anti-join's sink scan to the incremental
     months via partition pruning — a 100 TB sink is never fully re-scanned
     per split. Correctness: every new row has ``datetime >= since``, so any
     conflicting sink row lies in the pruned range by construction.
 
-    One action: the anti-join, the count and the write run as one query
-    (the sink's files are listed when it is planned, and new files are
-    committed only when it ends). An append of 0 rows adds no data file,
-    and leaves no sink directory where there was none — Spark's empty
-    partitioned write would leave one holding only ``_SUCCESS``, which no
-    read can infer a schema from.
+    One action: the dedup, the anti-join, the count and the write run as
+    one query (the sink's files are listed when it is planned, and new
+    files are committed only when it ends). An append of 0 rows adds no
+    data file, and leaves no sink directory where there was none — Spark's
+    empty partitioned write would leave one holding only ``_SUCCESS``,
+    which no read can infer a schema from.
     """
     recover_sink(sink_path)
     existed = os.path.exists(sink_path)
+    new_rows = to_intrusion_log(dedup_intrusions(rows))
     if existed:
         _migrate_unpartitioned_sink(spark, sink_path)
         existing = read_sink(spark, sink_path, INTRUSION_LOG_SCHEMA, since=since)
-        new_rows = new_rows.join(existing.select(*key), key, "left_anti")
+        new_rows = new_rows.join(existing.select(*UNIQUE_KEY), UNIQUE_KEY, "left_anti")
     n = _write_months(
         new_rows.withColumn(MONTH_COL, F.date_format("datetime", "yyyy-MM")),
         sink_path,

@@ -81,7 +81,8 @@ def parse_auth_glob(
     max_datetime: Optional[str] = None,
 ) -> DataFrame:
     """``parse_all_log_files`` analog: glob -> parse -> watermark filter ->
-    unique-key dedup -> intrusion rows (no uuid; add via to_intrusion_log)."""
+    unique-key dedup -> intrusion rows without ids (``route.append_dedup``,
+    the sink's one writer, gives each appended row its uuid)."""
     from ..pipeline.route import dedup_intrusions
 
     ev = parse_auth_lines(read_log_files(spark, log_prefix)).select(

@@ -11,9 +11,10 @@ relies on the DB unique key for exactly-once. Structured Streaming mapping:
   which :func:`route_journald` keeps the journald kinds: a stream routes
   journald records only, so a plain syslog or CLF line in the spool routes
   nowhere;
-* sink: ``foreachBatch`` doing the idempotent anti-join append (the
-  ON CONFLICT analog) and the per-batch systemd write, checkpointed, so
-  restarts never double-insert;
+* sink: ``foreachBatch`` handing each batch's rows to the sinks' one
+  writers, ``route.append_dedup`` (in-batch dedup, then the idempotent
+  anti-join append — the ON CONFLICT analog) and ``route.write_systemd``
+  (per-batch overwrite), checkpointed, so restarts never double-insert;
 * watermark: event-time watermark on the journald timestamp bounds state for
   windowed aggregates (the reference has no event-time windows — strictly
   arrival order — so the watermark only demonstrates late-data handling).
@@ -29,13 +30,7 @@ from pyspark.sql import functions as F
 
 from ..parsing.core import DEFAULT_SYSTEMD_LOG_FILTERS
 from ..pipeline.parse import JOURNALD_KINDS, route_lines
-from ..pipeline.route import (
-    UNIQUE_KEY,
-    append_dedup,
-    dedup_intrusions,
-    to_intrusion_log,
-    write_systemd,
-)
+from ..pipeline.route import append_dedup, write_systemd
 
 
 def route_journald(
@@ -100,13 +95,7 @@ def start_journald_ingest(
         # the ON CONFLICT check prunes to the current months)
         since_row = intr.agg(F.min("datetime")).first()[0]
         since = since_row.isoformat(sep=" ") if since_row is not None else None
-        append_dedup(
-            spark,
-            intr_path,
-            to_intrusion_log(dedup_intrusions(intr)),
-            key=UNIQUE_KEY,
-            since=since,
-        )
+        append_dedup(spark, intr_path, intr, since=since)
         intr.unpersist()
         # per-batch overwrite subdir = idempotent replay on restart
         write_systemd(sysd, os.path.join(sysd_path, f"batch={batch_id}"))

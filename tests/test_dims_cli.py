@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import subprocess
 import sys
 
+import pytest
 from conftest import REPO_ROOT, TESTDATA_SF_SMALL
 
 from security_log_analysis_rust_spark.pipeline.dims import (
@@ -92,6 +95,82 @@ def test_build_event_filters(spark):
     assert all(
         "2024-03-01" <= r.datetime.strftime("%Y-%m-%d") <= "2024-09-01" for r in rows
     )
+
+
+def test_import_and_post_keep_the_dedup_winner(spark, tmp_path, capsys):
+    """``import --table intrusion_log`` and ``POST /intrusion_log`` hand
+    their rows to ``append_dedup``: of two rows with one unique key, both
+    keep the ``dedup_intrusions`` winner (the lower username; the lower id
+    when the usernames tie), and an imported row without an id gets one."""
+    from security_log_analysis_rust_spark.cli import _dispatch
+    from security_log_analysis_rust_spark.http_api import SecurityLogApp
+    from security_log_analysis_rust_spark.pipeline.route import read_sink
+    from security_log_analysis_rust_spark.schemas import INTRUSION_LOG_SCHEMA
+
+    key = {"service": "ssh", "server": "home.ddboline.net", "host": "198.51.100.7"}
+    rows = [
+        {**key, "datetime": "2024-03-01T10:00:00Z", "username": "zed"},
+        {**key, "datetime": "2024-03-01T10:00:00Z", "username": "amy"},
+        {**key, "datetime": "2024-03-02T10:00:00Z", "username": "bob", "id": "id-b"},
+        {**key, "datetime": "2024-03-02T10:00:00Z", "username": "bob", "id": "id-a"},
+    ]
+    src = tmp_path / "in"
+    src.mkdir()
+    (src / "rows.json").write_text("\n".join(json.dumps(r) for r in rows))
+
+    def kept(sink):
+        got = read_sink(spark, os.path.join(sink, "intrusion_log"), INTRUSION_LOG_SCHEMA)
+        return {r.datetime.day: (r.username, r.id) for r in got.collect()}
+
+    cli_sink = str(tmp_path / "cli")
+    assert _dispatch(spark, argparse.Namespace(
+        cmd="import", table="intrusion_log", sink=cli_sink, path=str(src))) == 0
+    assert json.loads(capsys.readouterr().out.splitlines()[-1])["appended"] == 2
+    post_sink = str(tmp_path / "post")
+    assert SecurityLogApp(spark, post_sink, str(tmp_path)).intrusion_log_post(rows) == 2
+
+    for sink in (cli_sink, post_sink):
+        got = kept(sink)
+        assert got[1][0] == "amy" and got[1][1] is not None, sink
+        assert got[2] == ("bob", "id-a"), sink
+
+
+def test_dim_swap_crash_keeps_the_old_dim(spark, tmp_path, monkeypatch):
+    """A crash between the dim swap's renames (after the live dim is moved
+    aside, before the staged one is moved in) leaves ``read_dim`` returning
+    the old dim, a single synthetic file here, and the staging dir gone."""
+    from security_log_analysis_rust_spark.pipeline.dims import overwrite_dim, read_dim
+    from security_log_analysis_rust_spark.schemas import HOST_COUNTRY_SCHEMA
+    from security_log_analysis_rust_spark.synth.dims import write_dims
+
+    dims = str(tmp_path / "dims")
+    write_dims(dims)
+    path = os.path.join(dims, "host_country.parquet")
+    assert os.path.isfile(path)
+    before = sorted(tuple(r) for r in read_dim(spark, dims, "host_country").collect())
+    new = spark.createDataFrame([("203.0.113.9", "AQ", None, None)], HOST_COUNTRY_SCHEMA)
+
+    staged = path + ".tmp"
+    real_rename, real_replace = os.rename, os.replace
+
+    def crash_moving_staged_in(real):
+        def move(src, dst, **kw):
+            if os.path.normpath(src) == staged:
+                raise OSError("injected crash")
+            return real(src, dst, **kw)
+        return move
+
+    monkeypatch.setattr(os, "rename", crash_moving_staged_in(real_rename))
+    monkeypatch.setattr(os, "replace", crash_moving_staged_in(real_replace))
+    with pytest.raises(OSError, match="injected crash"):
+        overwrite_dim(new, path)
+    monkeypatch.undo()
+
+    after = sorted(tuple(r) for r in read_dim(spark, dims, "host_country").collect())
+    assert after == before
+    assert sorted(os.listdir(dims)) == ["country_code.parquet", "host_country.parquet"]
+    overwrite_dim(new, path)
+    assert [r.host for r in read_dim(spark, dims, "host_country").collect()] == ["203.0.113.9"]
 
 
 def test_cli_export_import_host_country(tmp_path):

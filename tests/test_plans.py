@@ -115,14 +115,11 @@ def test_incremental_antijoin_prunes_sink_partitions(spark, tmp_path):
     incremental months (VERDICT r1 #4), not re-scan the full sink."""
     from security_log_analysis_rust_spark.pipeline.route import (
         append_dedup,
-        dedup_intrusions,
         sink_month_filter,
-        to_intrusion_log,
     )
 
     sink = str(tmp_path / "intrusion_log")
-    events = dedup_intrusions(extract_events(_pages(spark))["events"])
-    append_dedup(spark, sink, to_intrusion_log(events))
+    append_dedup(spark, sink, extract_events(_pages(spark))["events"])
     pruned = sink_month_filter(spark.read.parquet(sink), "2024-07-01 00:00:00")
     plan = _plan(pruned)
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]

@@ -156,11 +156,7 @@ def test_writers_write_the_declared_schemas(spark, tmp_path):
     from pyspark.sql.types import StringType
 
     from security_log_analysis_rust_spark.pipeline.checkpoint import run_incremental
-    from security_log_analysis_rust_spark.pipeline.dims import (
-        overwrite_dim,
-        read_dim,
-        upsert_host_country,
-    )
+    from security_log_analysis_rust_spark.pipeline.dims import merge_host_country
     from security_log_analysis_rust_spark.schemas import (
         COUNTRY_CODE_SCHEMA,
         HOST_COUNTRY_SCHEMA,
@@ -194,10 +190,9 @@ def test_writers_write_the_declared_schemas(spark, tmp_path):
         got = spark.read.parquet(os.path.join(dims, f"{name}.parquet")).schema
         assert _types(got) == _types(declared), name
 
-    # the dim upsert's overwrite
+    # the dim's one writer
     updates = spark.createDataFrame([("203.0.113.9", "AQ", None, None)],
                                     HOST_COUNTRY_SCHEMA)
+    assert merge_host_country(spark, dims, updates) == 1
     hc_path = os.path.join(dims, "host_country.parquet")
-    overwrite_dim(upsert_host_country(read_dim(spark, dims, "host_country"), updates),
-                  hc_path)
     assert _types(spark.read.parquet(hc_path).schema) == _types(HOST_COUNTRY_SCHEMA)

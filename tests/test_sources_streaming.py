@@ -62,13 +62,15 @@ def test_export_import_roundtrip(spark, tmp_path):
         export_json,
         import_json,
     )
-    from security_log_analysis_rust_spark.pipeline.route import to_intrusion_log
     from security_log_analysis_rust_spark.synth import ensure_synthetic
     from security_log_analysis_rust_spark.pipeline.parse import extract_events
-    from security_log_analysis_rust_spark.pipeline.route import dedup_intrusions
+    from security_log_analysis_rust_spark.pipeline.route import append_dedup, read_sink
+    from security_log_analysis_rust_spark.schemas import INTRUSION_LOG_SCHEMA
 
     pages = spark.read.parquet(ensure_synthetic("/root/testdata/sf0.001")["pages"])
-    intr = to_intrusion_log(dedup_intrusions(extract_events(pages)["events"]))
+    sink = str(tmp_path / "intrusion_log")
+    append_dedup(spark, sink, extract_events(pages)["events"])
+    intr = read_sink(spark, sink, INTRUSION_LOG_SCHEMA)
     out = str(tmp_path / "export")
     export_json(intr, out, limit=100)
     back = import_json(spark, out)
